@@ -1,27 +1,30 @@
-"""The flagship job: pages -> extracted documents, resumable, skew-salted.
+"""The flagship job: pages -> extracted documents, resumable.
 
 Plan (SURVEY.md §3.1):
 
     scan pages                         <- Catalyst column pruning: only
       |                                   (url, warc_ts, html, lang) read
       | left_anti join lineage.url     <- resume (J4); no-op on first run
-      | repartition(xxhash64(url, salt))  <- explicit skew mitigation for
-      |                                     mega-hosts (north_rule); salt
-      |                                     decorrelates host hot-spots
+      | repartition(xxhash64(url, salt))  <- spreads the anti-join's pending
+      |                                     rows evenly over the slots: new
+      |                                     urls sit in the few scan files
+      |                                     that hold them, and those tasks
+      |                                     would straggle
       | mapInPandas(extract_batch)     <- detect+recognize+order+assemble,
       |                                   one Arrow batch at a time, zero
       |                                   further shuffle
       | observe(metrics)               <- docs/spans counters (A8 analog)
       v write commit + lineage         <- manifest snapshot (S3/S4 analog)
 
-At 100 TB the only data movement is the optional salting repartition; it can
-be dropped (`salt_partitions=None`) when the source layout is already
-well-distributed, turning the whole job into a scan -> map -> write with no
-exchange at all.
+At 100 TB the only data movement is the optional url-hash repartition; it
+can be dropped (`salt_partitions=None`) when the pending rows are already
+spread over the scan's files, turning the whole job into a scan -> map ->
+write with no exchange at all.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.observation import Observation
 
@@ -56,6 +59,9 @@ def selective_salt(
     The standard two-job skew pattern: the per-host counts are
     localCheckpoint()ed so the scan+groupBy runs once, then two tiny jobs
     (total, hot list) run against the checkpoint.
+
+    No job path calls this any more: ``extract_plan`` spreads every
+    pending row with one url-hash repartition instead.
     """
     host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
     counts = (
@@ -89,17 +95,15 @@ def extract_plan(
     salt_mode: str = "all",
     decode_method: str = "greedy",
 ) -> DataFrame:
-    """Build the (lazy) extraction DataFrame: resume filter + salted
-    repartition + single-pass extraction. ``salt_mode='selective'``
-    shuffles only detected mega-host rows (see selective_salt)."""
+    """Build the (lazy) extraction DataFrame: resume filter + url-hash
+    repartition over ``salt_partitions`` + single-pass extraction. Building
+    it runs no Spark job. ``salt_mode`` is accepted and ignored: every
+    mode spreads all pending rows the same way."""
     pending = pending_pages(pages, lineage)
     if salt_partitions:
-        if salt_mode == "selective":
-            pending = selective_salt(pending, salt_partitions)
-        else:
-            pending = pending.repartition(
-                salt_partitions, F.xxhash64(F.col("url"), F.lit(SALT))
-            )
+        pending = pending.repartition(
+            salt_partitions, F.xxhash64(F.col("url"), F.lit(SALT))
+        )
     return extract_pages(pending, decode_method=decode_method)
 
 
@@ -118,6 +122,7 @@ def run_extract_job(
 
     Returns (commit_id, metrics dict). Re-running after a failure processes
     only pages missing from the lineage table (exactly-once per url).
+    ``salt_mode`` is a no-op kept for existing callers (see extract_plan).
 
     Production gates (both off by default):
     - ``quality_gate``: drop extracted docs failing the Gopher rule set
@@ -219,18 +224,14 @@ def run_extract_job(
     # the reference's stream counters, base_ocr.py:32-51)
     metrics = dict(obs.get)
     metrics["gated"] = n_gated
+    row = {"commit_id": commit_id}
+    row.update({k: int(metrics[k] or 0) for k in ("docs", "spans", "chars", "gated")})
     metrics_tbl = ManifestTable(f"{out_root}/metrics")
+    # a pandas frame goes through Arrow into a one-partition local relation:
+    # one task, one file (a Python list is spread over every slot)
     metrics_tbl.append(
         spark.createDataFrame(
-            [
-                (
-                    commit_id,
-                    int(metrics.get("docs") or 0),
-                    int(metrics.get("spans") or 0),
-                    int(metrics.get("chars") or 0),
-                    int(n_gated),
-                )
-            ],
+            pd.DataFrame([row]),
             "commit_id long, docs long, spans long, chars long, gated long",
         ),
         commit_id,

@@ -5,7 +5,7 @@
         --output <warehouse root> [--salt-partitions N] [--decode beam]
 
 Runs one resumable extraction commit: scan -> lineage anti-join ->
-(optional salted repartition) -> single mapInPandas extraction -> manifest
+(optional url-hash repartition) -> single mapInPandas extraction -> manifest
 commit + lineage + metrics. Re-running after any failure processes only
 the remainder (exactly-once per url; aborted commits roll back at start).
 
@@ -30,13 +30,6 @@ def main():
     ap.add_argument("--synth-sf", help="synthesize pages from this sf dir instead")
     ap.add_argument("--output", required=True, help="warehouse root for commits")
     ap.add_argument("--salt-partitions", type=int, default=None)
-    ap.add_argument(
-        "--salt-mode",
-        choices=["all", "selective"],
-        default="all",
-        help="'selective' shuffles only detected mega-host rows (two-pass "
-        "skew pattern); 'all' repartitions the whole input",
-    )
     ap.add_argument("--decode", choices=["greedy", "beam"], default="greedy")
     ap.add_argument(
         "--quality-gate",
@@ -183,7 +176,6 @@ def main():
             pages,
             args.output,
             salt_partitions=args.salt_partitions,
-            salt_mode=args.salt_mode,
             decode_method=args.decode,
             quality_gate=args.quality_gate,
             dedup_threshold=args.dedup_gate,

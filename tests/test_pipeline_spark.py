@@ -80,6 +80,44 @@ def test_resume_exactly_once(spark, golden, tmp_path):
     cols = set(lineage.columns)
     assert {"url", "partition_id", "commit_id", "n_spans", "out_sha256"} <= cols
 
+    # each commit's metrics row is one file holding the returned counters
+    for commit_id, m in ((commit1, m1), (commit2, m2)):
+        commit_dir = tmp_path / "warehouse" / "metrics" / "data" / f"commit={commit_id}"
+        assert len(list(commit_dir.glob("*.parquet"))) == 1
+        rows = spark.read.parquet(str(commit_dir)).collect()
+        assert len(rows) == 1
+        assert m["gated"] == 0
+        assert rows[0].asDict() == {"commit_id": commit_id, **m}
+
+
+def test_extract_plan_runs_no_spark_job(spark):
+    """Building the plan is lazy: no counting pass runs before the write."""
+    from pyspark.sql import functions as F
+
+    urls = [(f"https://mega.example.com/p/{i}",) for i in range(90)]
+    urls += [(f"https://host{i}.example.com/x",) for i in range(10)]
+    pages = spark.createDataFrame(urls, "url string").select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(b"<p>w</p>").alias("html"),
+        F.lit("w").alias("text"),
+        F.lit("en").alias("lang"),
+    )
+    lineage = spark.createDataFrame(urls[::4], "url string")
+    sc = spark.sparkContext
+    group = "extract-plan-build"
+    sc.setJobGroup(group, "extract_plan build")
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        extract_plan(pages, lineage=lineage, salt_partitions=4, salt_mode="selective")
+        after = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(1).collect()  # the tracker does see this group's jobs
+        control = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after == before
+    assert control > after
+
 
 def test_plan_has_no_shuffle_without_salting(spark, golden, tmp_path):
     # production shape: pages come from storage (a scan, not the synthesis

@@ -1,6 +1,7 @@
 """Selective (stats-driven) skew salting: only mega-host rows shuffle;
 the cold tail flows scan -> extract with no exchange (plans/pipeline.py
-selective_salt)."""
+selective_salt). No job path calls selective_salt any more; extract_plan
+spreads every pending row with one url-hash repartition."""
 
 from pyspark.sql import functions as F
 
