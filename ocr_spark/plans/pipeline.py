@@ -153,22 +153,22 @@ def run_extract_job(
             out_tbl.rollback(snap["commit_id"])
 
     lineage = lin_tbl.read(spark)
+    # partition_id is stamped once, in the extraction stage: the gates'
+    # joins, the output write and the lineage read-back all carry the
+    # column, so a url's output and lineage rows hold the same id
     extracted = extract_plan(
         pages,
         lineage=lineage,
         salt_partitions=salt_partitions,
-        salt_mode=salt_mode,
         decode_method=decode_method,
-    )
+    ).withColumn("partition_id", F.spark_partition_id())
 
     gated = None
     n_gated = 0
     if quality_gate or dedup_threshold is not None:
         # the extraction output feeds the gate predicates AND both the
         # kept/gated splits: persist so the python stage runs once
-        extracted = extracted.withColumn(
-            "partition_id", F.spark_partition_id()
-        ).persist()
+        extracted = extracted.persist()
         kept = extracted
         if quality_gate:
             from ..operators.corpus_filters import gopher_rules
@@ -203,12 +203,7 @@ def run_extract_job(
     )
 
     commit_id = out_tbl.next_commit_id()
-    with_lineage = (
-        extracted
-        if "partition_id" in extracted.columns
-        else extracted.withColumn("partition_id", F.spark_partition_id())
-    )
-    out_tbl.append(with_lineage, commit_id)
+    out_tbl.append(extracted, commit_id)
 
     # lineage derives from what was actually committed in THIS snapshot —
     # read it back from the committed files so a mid-write crash can never
@@ -240,6 +235,45 @@ def run_extract_job(
     return commit_id, metrics
 
 
+def _page_stream(spark, pages_glob: str, max_files_per_trigger: int | None):
+    """Streaming scan of the page files appearing under ``pages_glob``.
+    ``max_files_per_trigger`` is the ingestion-rate knob (the reference's
+    buffer_size, image_io.py:181+)."""
+    from ..sources.pages import PAGES_SCHEMA
+
+    reader = spark.readStream.schema(PAGES_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(pages_glob)
+
+
+def _start_catalog_stream(pages, tbl: ManifestTable, checkpoint_dir: str, **trigger):
+    """Start the extraction of a page stream into ``tbl``: every non-empty
+    micro-batch becomes catalog commit ``batchId``, so a batch replayed
+    from the WAL after a crash OVERWRITES its own commit instead of
+    duplicating rows."""
+
+    def commit_batch(batch_df, batch_id: int):
+        # pin before inspecting: isEmpty + append on the raw plan would
+        # evaluate it twice — double the extraction work on a file source,
+        # and on a live source a second fetch that could commit different
+        # rows than it checked
+        batch_df = batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                tbl.append(batch_df, commit_id=int(batch_id))
+        finally:
+            batch_df.unpersist()
+
+    return (
+        extract_pages(pages)
+        .writeStream.foreachBatch(commit_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
+
+
 def run_streaming_extract(
     spark,
     pages_glob: str,
@@ -257,18 +291,12 @@ def run_streaming_extract(
     (file-source offsets + sink commit log) instead of the lineage table —
     the batch job's anti-join resume and the stream's checkpoint are the
     two standard shapes of the same idempotence contract.
-    ``max_files_per_trigger`` is the ingestion-rate knob (the reference's
-    buffer_size, image_io.py:181+).
+    ``max_files_per_trigger`` is the ingestion-rate knob.
     """
-    from ..sources.pages import PAGES_SCHEMA
-
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(pages_glob)
-    extracted = extract_pages(pages)
+    pages = _page_stream(spark, pages_glob, max_files_per_trigger)
     writer = (
-        extracted.writeStream.format("parquet")
+        extract_pages(pages)
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -302,35 +330,9 @@ def run_streaming_extract_to_catalog(
     same commit ids.
 
     Returns the ManifestTable (drained with availableNow)."""
-    from ..sources.catalog import ManifestTable
-    from ..sources.pages import PAGES_SCHEMA
-
     tbl = ManifestTable(table_root)
-
-    def commit_batch(batch_df, batch_id: int):
-        # pin before inspecting: the batch plan contains the extraction
-        # python stage, and isEmpty + append would otherwise run it twice
-        # per micro-batch (correct for this replayable source, but double
-        # the work)
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.isEmpty():
-                tbl.append(batch_df, commit_id=int(batch_id))
-        finally:
-            batch_df.unpersist()
-
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(pages_glob)
-    q = (
-        extract_pages(pages)
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    pages = _page_stream(spark, pages_glob, max_files_per_trigger)
+    _start_catalog_stream(pages, tbl, checkpoint_dir, availableNow=True).awaitTermination()
     return tbl
 
 
@@ -367,23 +369,9 @@ def run_streaming_mirror_extract_to_catalog(
     source, processingTime trigger); the caller observes the table and
     stops the query."""
     from ..sources import httpmirror
-    from ..sources.catalog import ManifestTable
 
     httpmirror.register(spark)
     tbl = ManifestTable(table_root)
-
-    def commit_batch(batch_df, batch_id: int):
-        # pin the micro-batch before inspecting it: unlike the replayable
-        # file source, a live-camera batch plan re-fetches over HTTP per
-        # evaluation, so isEmpty + append on the raw plan would hit the
-        # cameras twice and could commit different frames than it checked
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.isEmpty():
-                tbl.append(batch_df, commit_id=int(batch_id))
-        finally:
-            batch_df.unpersist()
-
     frames = (
         spark.readStream.format("httpmirror")
         .option("urls", urls)
@@ -398,11 +386,7 @@ def run_streaming_mirror_extract_to_catalog(
         "cast(null as string) AS text",
         "cast(null as string) AS lang",
     )
-    q = (
-        extract_pages(pages)
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
+    q = _start_catalog_stream(
+        pages, tbl, checkpoint_dir, processingTime=f"{trigger_seconds} seconds"
     )
     return q, tbl

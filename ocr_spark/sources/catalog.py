@@ -1,14 +1,29 @@
 """Parquet-backed table catalog with manifest snapshots ("iceberg-like").
 
 The sandbox runtime has no Iceberg catalog jar (SURVEY.md §7 risk 5), so the
-writer sits behind this one interface: each ``commit`` appends parquet files
-under ``data/commit=<n>/`` and records a manifest entry (snapshot id, row
-count, wall time). Resume and exactly-once semantics come from the lineage
-table + anti-join (lineage.py), matching the reference's predicted-map skip
-(/root/reference/models/detection/base_detector.py:170-207).
+writer sits behind this one interface. Every commit goes through ONE writer,
+``ManifestTable._commit``: it overwrites ``data/commit=<id>/`` with the
+commit's parquet files, then saves ``manifest.json`` last with one entry
+``{commit_id, path, ts, op, ...}`` (any earlier entry of the same id is
+replaced, so a retried commit never lists its files twice).
 
-On a real cluster this maps 1:1 onto ``df.writeTo(tbl).append()`` with
-Iceberg snapshot commits (north_rule "commit-level checkpoints").
+``op`` names what the commit did:
+
+- ``append`` adds rows (``append``; the only op ``read_changes`` streams);
+- ``compact`` rewrites the current view into fewer files (``compact``);
+- ``merge`` / ``delete`` rewrite the commits an upsert or a delete touched,
+  keeping their other rows (``merge``, ``delete_where``).
+
+The three rewrites carry ``replaces``: the ids of the commits whose rows the
+new commit holds from now on. The current view hides replaced commits;
+``read(as_of=...)`` below the rewrite's id still serves them, until
+``expire()`` deletes them. Optional keys: ``partitioned`` (hive partition
+columns of an append) and ``stats`` (per-column [min, max] zone maps).
+
+Resume and exactly-once semantics come from the lineage table + anti-join
+(lineage.py), matching the reference's predicted-map skip. On a real
+cluster this maps 1:1 onto ``df.writeTo(tbl).append()`` with Iceberg
+snapshot commits (north_rule "commit-level checkpoints").
 """
 
 from __future__ import annotations
@@ -65,38 +80,43 @@ class ManifestTable:
             c: [row[f"__min_{c}"], row[f"__max_{c}"]] for c in stats_cols
         }
 
-    def append(
-        self, df, commit_id: int | None = None, *, stats_cols=(), partition_by=()
-    ) -> int:
-        """Write df as one atomic-ish commit; manifest updated last (a crash
-        mid-write leaves an unreferenced directory, never a torn snapshot).
-        ``stats_cols`` records commit-level min/max zone maps in the
-        manifest for :meth:`read_pruned` data skipping. ``partition_by``
-        hive-partitions the commit's files on the given columns (Iceberg
-        partition-spec analog) — a reader filtering on them prunes whole
-        directories at the scan (the vecindex IVF-list layout)."""
-        if commit_id is None:
-            commit_id = self.next_commit_id()
+    def _commit(self, df, commit_id: int, op: str, partition_by=(), **entry) -> int:
+        """The one writer: overwrite ``data/commit=<id>`` with df, then
+        save the manifest LAST with any same-id entry replaced. A crash
+        mid-write leaves an unreferenced directory, never a torn snapshot;
+        the data write is an overwrite and so is the entry, so a retry of
+        the same id never lists the path twice (read() would duplicate
+        every row of the commit). ``entry`` holds the op's extra manifest
+        keys."""
         path = os.path.join(self.data_dir, f"commit={commit_id}")
-        stats = self._column_stats(df, stats_cols)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        # the data write above is an overwrite; the manifest entry must be
-        # too, or a retry of the same commit id would list the path twice
-        # and read() would duplicate every row of the commit
+        record = {"commit_id": commit_id, "path": path, "ts": time.time(), "op": op}
+        if partition_by:
+            record["partitioned"] = list(partition_by)
+        record.update(entry)
         manifest = [
             s for s in self._load_manifest() if s["commit_id"] != commit_id
         ]
-        entry = {"commit_id": commit_id, "path": path, "ts": time.time(), "op": "append"}
-        if partition_by:
-            entry["partitioned"] = list(partition_by)
-        if stats:
-            entry["stats"] = stats
-        manifest.append(entry)
-        self._save_manifest(manifest)
+        self._save_manifest(manifest + [record])
         return commit_id
+
+    def append(
+        self, df, commit_id: int | None = None, *, stats_cols=(), partition_by=()
+    ) -> int:
+        """Write df as one commit (see ``_commit``). ``stats_cols`` records
+        commit-level min/max zone maps in the manifest for
+        :meth:`read_pruned` data skipping. ``partition_by`` hive-partitions
+        the commit's files on the given columns (Iceberg partition-spec
+        analog) — a reader filtering on them prunes whole directories at
+        the scan (the vecindex IVF-list layout)."""
+        if commit_id is None:
+            commit_id = self.next_commit_id()
+        stats = self._column_stats(df, stats_cols)
+        entry = {"stats": stats} if stats else {}
+        return self._commit(df, commit_id, "append", partition_by, **entry)
 
     @staticmethod
     def _read_entries(spark, entries):
@@ -193,41 +213,55 @@ class ManifestTable:
         manifest (hidden from the current view, still served by
         ``read(as_of=...)``) until ``expire()``. Returns the new commit id,
         or None when there is nothing to fold."""
-        manifest = self._load_manifest()
-        vis = self._visible(manifest)
+        vis = self._visible(self._load_manifest())
         if len(vis) <= 1:
             return None
-        cid = self.next_commit_id()
-        # mergeSchema: compaction of a schema-evolved table must keep the
-        # UNION schema, or the rewrite would silently drop added columns.
-        # A hive-partitioned table compacts to a PLAIN commit (the
-        # partition column becomes a data column — Iceberg's
-        # rewrite-with-new-spec shape); readers see identical rows.
-        df = self._read_entries(spark, vis)
-        path = os.path.join(self.data_dir, f"commit={cid}")
-        df.coalesce(target_partitions).write.mode("overwrite").parquet(path)
-        manifest.append(
-            {
-                "commit_id": cid,
-                "path": path,
-                "ts": time.time(),
-                "op": "compact",
-                "replaces": sorted(s["commit_id"] for s in vis),
-            }
+        # the merged read keeps the UNION schema of a schema-evolved table
+        # (a rewrite must not drop added columns). A hive-partitioned table
+        # compacts to a PLAIN commit (the partition column becomes a data
+        # column — Iceberg's rewrite-with-new-spec shape); readers see
+        # identical rows.
+        df = self._read_entries(spark, vis).coalesce(target_partitions)
+        replaces = sorted(s["commit_id"] for s in vis)
+        return self._commit(df, self.next_commit_id(), "compact", replaces=replaces)
+
+    def _commits_holding(self, spark, matching) -> list[dict]:
+        """The visible entries holding at least one row that ``matching``
+        (a DataFrame -> DataFrame filter) keeps: one scan of every visible
+        commit, each tagged with its id, where parquet column pruning and
+        predicate pushdown read only the columns the filter needs. Commits
+        are read one by one and unioned by name, so hive-partitioned and
+        schema-evolved commits mix (a column missing from a commit reads
+        as NULL)."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        vis = self._visible(self._load_manifest())
+        if not vis:
+            return []
+        tagged = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            (
+                spark.read.parquet(s["path"]).withColumn("_cid", F.lit(s["commit_id"]))
+                for s in vis
+            ),
         )
-        self._save_manifest(manifest)
-        return cid
+        hit_ids = {
+            r["_cid"] for r in matching(tagged).select("_cid").distinct().collect()
+        }
+        return [s for s in vis if s["commit_id"] in hit_ids]
 
     def merge(self, spark, updates, key: str = "url") -> int | None:
         """Iceberg MERGE INTO, copy-on-write flavor: upsert ``updates`` by
         ``key`` (matched rows are replaced, new keys inserted).
 
-        Scale shape — touch only what matched: one column-pruned scan of
-        the key column across visible commits finds which commits contain a
-        matched key (the update side is broadcast — a merge batch is tiny
-        next to the table). UNAFFECTED commits are never read again and
-        keep their files verbatim; the affected commits' surviving rows and
-        the updates land together as ONE new commit whose manifest entry
+        Scale shape — touch only what matched: one key-column scan across
+        visible commits finds which commits contain a matched key (the
+        update side is broadcast — a merge batch is tiny next to the
+        table). UNAFFECTED commits are never read again and keep their
+        files verbatim; the affected commits' surviving rows and the
+        updates land together as ONE new commit whose manifest entry
         ``replaces`` the affected ids. History is preserved for
         ``read(as_of=...)`` until ``expire()`` — the same snapshot algebra
         as ``compact``. Returns the new commit id (None for empty updates).
@@ -236,52 +270,18 @@ class ManifestTable:
 
         if updates.rdd.isEmpty():
             return None
-        manifest = self._load_manifest()
-        vis = self._visible(manifest)
-        upd_keys = updates.select(key).distinct()
-        affected: list[dict] = []
-        if vis:
-            # one job, key column only: parquet column pruning makes this a
-            # fraction of the table bytes even with millions of rows
-            keyed = None
-            for s in vis:
-                part = (
-                    spark.read.parquet(s["path"])
-                    .select(key)
-                    .withColumn("_cid", F.lit(s["commit_id"]))
-                )
-                keyed = part if keyed is None else keyed.unionByName(part)
-            hit_ids = {
-                r["_cid"]
-                for r in keyed.join(F.broadcast(upd_keys), key)
-                .select("_cid")
-                .distinct()
-                .collect()
-            }
-            affected = [s for s in vis if s["commit_id"] in hit_ids]
-        cid = self.next_commit_id()
-        if affected:
-            survivors = spark.read.parquet(*[s["path"] for s in affected]).join(
-                F.broadcast(upd_keys), key, "left_anti"
-            )
-            new_rows = survivors.unionByName(
-                updates.select(*survivors.columns), allowMissingColumns=False
-            )
-        else:
-            new_rows = updates
-        path = os.path.join(self.data_dir, f"commit={cid}")
-        new_rows.write.mode("overwrite").parquet(path)
-        manifest.append(
-            {
-                "commit_id": cid,
-                "path": path,
-                "ts": time.time(),
-                "op": "merge",
-                "replaces": sorted(s["commit_id"] for s in affected),
-            }
+        upd_keys = F.broadcast(updates.select(key).distinct())
+        affected = self._commits_holding(
+            spark, lambda df: df.join(upd_keys, key, "left_semi")
         )
-        self._save_manifest(manifest)
-        return cid
+        new_rows = updates
+        if affected:
+            survivors = self._read_entries(spark, affected).join(
+                upd_keys, key, "left_anti"
+            )
+            new_rows = survivors.unionByName(updates.select(*survivors.columns))
+        replaces = sorted(s["commit_id"] for s in affected)
+        return self._commit(new_rows, self.next_commit_id(), "merge", replaces=replaces)
 
     def delete_where(self, spark, predicate) -> int | None:
         """Iceberg DELETE FROM, copy-on-write flavor: drop every row where
@@ -303,42 +303,12 @@ class ManifestTable:
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(pred, F.lit(False))
-        manifest = self._load_manifest()
-        vis = self._visible(manifest)
-        if not vis:
-            return None
-        keyed = None
-        for s in vis:
-            part = (
-                spark.read.parquet(s["path"])
-                .withColumn("_cid", F.lit(s["commit_id"]))
-            )
-            keyed = (
-                part
-                if keyed is None
-                else keyed.unionByName(part, allowMissingColumns=True)
-            )
-        hit_ids = {
-            r["_cid"] for r in keyed.where(hit).select("_cid").distinct().collect()
-        }
-        affected = [s for s in vis if s["commit_id"] in hit_ids]
+        affected = self._commits_holding(spark, lambda df: df.where(hit))
         if not affected:
             return None
-        cid = self.next_commit_id()
         survivors = self._read_entries(spark, affected).where(~hit)
-        path = os.path.join(self.data_dir, f"commit={cid}")
-        survivors.write.mode("overwrite").parquet(path)
-        manifest.append(
-            {
-                "commit_id": cid,
-                "path": path,
-                "ts": time.time(),
-                "op": "delete",
-                "replaces": sorted(s["commit_id"] for s in affected),
-            }
-        )
-        self._save_manifest(manifest)
-        return cid
+        replaces = sorted(s["commit_id"] for s in affected)
+        return self._commit(survivors, self.next_commit_id(), "delete", replaces=replaces)
 
     def read_changes(self, spark, since: int, until: int | None = None):
         """Iceberg incremental (append) scan: rows ADDED by commits with

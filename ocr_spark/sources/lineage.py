@@ -7,7 +7,7 @@ only true equi-join of the system (SURVEY.md §2.3 J4): completed work is a
 small table of urls, so Catalyst broadcasts it into a left_anti join against
 the pages scan — no shuffle of the big side.
 
-Each lineage row records TaskContext partition id, span count, and the
+Each lineage row records the extraction partition id, span count, and the
 sha256 of the emitted text (north_rule: "per-partition lineage + metrics",
 determinism check for exactly-once resume).
 """
@@ -17,16 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-
 def lineage_of(extracted: DataFrame, commit_id: int) -> DataFrame:
-    pid = (
-        F.col("partition_id")
-        if "partition_id" in extracted.columns  # stamped at extraction time
-        else F.spark_partition_id()
-    )
+    """Lineage rows of ``extracted``, whose ``partition_id`` column the job
+    stamped at extraction time."""
     return extracted.select(
         "url",
-        pid.alias("partition_id"),
+        "partition_id",
         F.lit(commit_id).alias("commit_id"),
         F.col("n_spans"),
         F.sha2(F.col("text").cast("binary"), 256).alias("out_sha256"),

@@ -126,6 +126,8 @@ def main():
     )
     args = ap.parse_args()
 
+    from pyspark.errors import AnalysisException
+
     from ocr_spark.plans.pipeline import run_extract_job
     from ocr_spark.plans.session import get_spark
     from ocr_spark.sources.catalog import ManifestTable
@@ -147,7 +149,7 @@ def main():
                     continue
                 try:
                     cid = tbl.delete_where(spark, args.delete_where)
-                except Exception as ex:  # predicate column absent here
+                except AnalysisException as ex:  # predicate column absent here
                     print(f"deleted from {name}: skipped ({str(ex).splitlines()[0][:80]})")
                     continue
                 expired = tbl.expire() if cid is not None else []
@@ -181,12 +183,11 @@ def main():
             dedup_threshold=args.dedup_gate,
         )
         print(f"commit={commit_id} metrics={metrics}")
+        if args.export_wet or args.export_jsonl or args.export_vecindex or args.export_postings:
+            extracted = ManifestTable(os.path.join(args.output, "extracted")).read(spark)
         if args.export_wet:
             from ocr_spark.sources.wet import export_wet
 
-            extracted = ManifestTable(os.path.join(args.output, "extracted")).read(
-                spark
-            )
             manifest = export_wet(extracted, args.export_wet).collect()
             total = sum(r.n_records for r in manifest)
             print(f"wet_export files={len(manifest)} records={total}")
@@ -199,9 +200,6 @@ def main():
         if args.export_jsonl:
             from ocr_spark.sources.jsonl import export_jsonl
 
-            extracted = ManifestTable(os.path.join(args.output, "extracted")).read(
-                spark
-            )
             manifest = export_jsonl(extracted, args.export_jsonl).collect()
             total = sum(r.n_records for r in manifest)
             print(f"jsonl_export files={len(manifest)} records={total}")
@@ -224,9 +222,6 @@ def main():
         if args.export_vecindex:
             from ocr_spark.sources.vecindex import build_vector_index, text_embeddings
 
-            extracted = ManifestTable(os.path.join(args.output, "extracted")).read(
-                spark
-            )
             emb = text_embeddings(extracted)
             idx = build_vector_index(
                 emb, args.export_vecindex, m=8, n_codes=64, n_iters=2, n_lists=8
@@ -244,9 +239,6 @@ def main():
 
             from ocr_spark.sources.invindex import export_postings
 
-            extracted = ManifestTable(os.path.join(args.output, "extracted")).read(
-                spark
-            )
             docs = extracted.select(
                 F.xxhash64("url").alias("doc_id"), "text"
             ).withColumn("doc_id", F.abs(F.col("doc_id")))

@@ -335,3 +335,45 @@ def test_read_changes_refuses_delete_commits(spark, tmp_path):
     tbl.delete_where(spark, "id = 0")
     with pytest.raises(ValueError, match="overwrite"):
         tbl.read_changes(spark, since=-1)
+
+
+def test_merge_across_partitioned_commits(spark, tmp_path):
+    """An upsert whose keys hit two hive-partitioned commits reads the
+    survivors per commit, not as one multi-root scan."""
+    tbl = ManifestTable(str(tmp_path / "part"))
+    for c in range(2):
+        df = spark.createDataFrame(
+            [(c * 100 + i, f"v{c}_{i}", i % 2) for i in range(4)],
+            "id long, v string, k int",
+        )
+        tbl.append(df, c, partition_by=("k",))
+    upd = spark.createDataFrame(
+        [(1, "U1", 1), (102, "U102", 0)], "id long, v string, k int"
+    )
+    cid = tbl.merge(spark, upd, key="id")
+    entry = next(s for s in tbl.snapshots if s["commit_id"] == cid)
+    assert entry["replaces"] == [0, 1]
+    cur = {r.id: (r.v, r.k) for r in tbl.read(spark).collect()}
+    assert len(cur) == 8
+    assert cur[1] == ("U1", 1) and cur[102] == ("U102", 0)
+    assert cur[0] == ("v0_0", 0) and cur[103] == ("v1_3", 1)
+
+
+def test_merge_across_schema_evolved_commits(spark, tmp_path):
+    """An upsert whose keys hit a commit before and a commit after an
+    added column keeps the union schema; old rows read it as NULL."""
+    tbl = ManifestTable(str(tmp_path / "evo"))
+    tbl.append(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    tbl.append(
+        spark.createDataFrame(
+            [(3, "c", "en"), (4, "d", "fr")], "id long, v string, lang string"
+        )
+    )
+    upd = spark.createDataFrame(
+        [(1, "A", "de"), (3, "C", "es")], "id long, v string, lang string"
+    )
+    cid = tbl.merge(spark, upd, key="id")
+    entry = next(s for s in tbl.snapshots if s["commit_id"] == cid)
+    assert entry["replaces"] == [0, 1]
+    cur = {r.id: (r.v, r.lang) for r in tbl.read(spark).collect()}
+    assert cur == {1: ("A", "de"), 2: ("b", None), 3: ("C", "es"), 4: ("d", "fr")}

@@ -90,6 +90,38 @@ def test_resume_exactly_once(spark, golden, tmp_path):
         assert rows[0].asDict() == {"commit_id": commit_id, **m}
 
 
+@pytest.mark.parametrize("quality_gate", [False, True])
+def test_lineage_partition_id_matches_output(spark, tmp_path, quality_gate):
+    """partition_id is stamped once, at extraction: each url's lineage row
+    holds the id its output row was written with, with or without the
+    gates' joins in between; gated urls get an extraction id too."""
+    from pyspark.sql import functions as F
+
+    # the synthetic corpus fails the Gopher rules; prose pages pass them
+    prose = "<html><body><p>%s</p></body></html>" % (
+        "the reader and the writer walk to the market with a basket of fresh "
+        "bread while the city wakes " * 6
+    )
+    extra = spark.createDataFrame(
+        [(f"https://prose.example/{i}", None, prose.encode(), "t", "en") for i in range(40)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    pages = pages_df(spark, SF_SMOKE).unionByName(extra)
+    out_root = str(tmp_path / "wh")
+    _, m = run_extract_job(
+        spark, pages, out_root, salt_partitions=4, quality_gate=quality_gate
+    )
+    assert m["docs"] >= 40 and m["docs"] + m["gated"] == 540
+    assert (m["gated"] > 0) == quality_gate
+    out = ManifestTable(f"{out_root}/extracted").read(spark)
+    lin = ManifestTable(f"{out_root}/lineage").read(spark)
+    j = out.select("url", F.col("partition_id").alias("out_pid")).join(lin, "url")
+    assert j.count() == m["docs"]
+    assert j.where("out_pid <=> partition_id").count() == m["docs"]
+    assert lin.count() == 540
+    assert lin.where("partition_id BETWEEN 0 AND 3").count() == 540
+
+
 def test_extract_plan_runs_no_spark_job(spark):
     """Building the plan is lazy: no counting pass runs before the write."""
     from pyspark.sql import functions as F
