@@ -6,8 +6,8 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
 The flagship number is extraction throughput (docs/sec) over the pages
 table synthesized at the benchmark scale — the BASELINE.json metric.
-Run with SPARK_GRAFT_CPUS=8 and =32 for the N-vs-4N scaling-efficiency
-evidence (recorded in BENCH/BASELINE.md).
+Its summed wall time is not a speed yardstick: speed claims come from
+paired, interleaved perfbench runs (scripts/perfbench_ab.py).
 """
 
 from __future__ import annotations
@@ -170,37 +170,10 @@ BENCH_QUERIES = [
 ]
 
 
-#: best-of-N single-thread 10M-add loop time on THIS box when idle
-#: (measured 2026-08-21, load < 1 between Spark runs). The per-run
-#: calibration below is compared against this to annotate anti-scaling
-#: flags: a window whose calibration deviates > 20% from idle was
-#: co-tenant-loaded, and its flags are drift suspects, not structure
-#: (BENCH/BASELINE.md round-3 "box noise" methodology).
-IDLE_CALIBRATION_SEC = 0.35
-
-
-def hw_calibration(reps: int = 3) -> float:
-    """Pure-python single-thread probe of the box's CURRENT speed — the
-    same burn loop scripts/scaling.py uses for its hardware ceiling."""
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.time()
-        s = 0
-        for i in range(10_000_000):
-            s += i
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
-
-    # probe the host BEFORE the query loop too: a co-tenant burst that
-    # subsides before a single end-of-run probe would otherwise stamp a
-    # loaded window as clean (the round-3 2-3x swing methodology)
-    hw_before = hw_calibration()
 
     spark = get_spark("ocr_spark_bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -213,7 +186,7 @@ def main():
     # headline: flagship extraction throughput over a pages table read from
     # parquet — the production data path (scan -> single mapInPandas ->
     # sink). The corpus is replicated to a fixed size so the measurement is
-    # CPU-bound and identical at every cpu count (the N-vs-4N comparison).
+    # CPU-bound and identical at every cpu count.
     # The synthesized pages parquet is materialized once and reused
     # (measured separately as pages_synth); chaining the synthesis python
     # stage into the extraction would serialize the pipeline — see
@@ -309,71 +282,7 @@ def main():
         "n_docs": n_docs,
         "n_extracted": n_out,
         "docs_per_sec": round(n_out / t_extract, 1) if t_extract else None,
-        # same-window tenancy probes, before and after the query loop
-        # (see IDLE_CALIBRATION_SEC); the WORST of the two stamps the
-        # window
-        "hw_calibration_sec": max(hw_before, hw_calibration()),
-        "hw_calibration_before_sec": hw_before,
     }
-
-    # anti-scaling gate (VERDICT r02 item 4): when SPARK_GRAFT_PAIR_JSON
-    # points at a lower-cpu companion run, flag every query that got BOTH
-    # slower than 1.3x the small-run time AND costs > 2 s — "more cores,
-    # meaningfully slower" must never pass silently again (the r2r
-    # hits/training_pipeline pair). The flags ride in the JSON so the
-    # recorded BENCH_r{N} file carries its own verdict.
-    pair_path = os.environ.get("SPARK_GRAFT_PAIR_JSON", "")
-    if pair_path and os.path.exists(pair_path):
-        with open(pair_path) as f:
-            pair = json.load(f)
-        # tenancy annotation (VERDICT r03 next-round #5): compare BOTH
-        # windows' pure-python calibration to idle — a loaded window
-        # produces drift flags that contradict the quiet interleaved
-        # A/B/A (r3c: sa_dups 1.63x under load 4-6 vs 1.08x quiet), so
-        # recorded flags must carry their own credibility verdict
-        this_hw = result["hw_calibration_sec"]
-        pair_hw = pair.get("hw_calibration_sec")
-        # ADVICE r4: the boolean is ADVISORY in both directions — the
-        # hardcoded idle reference is per-box, and the round-4 windows
-        # showed the single-thread probe reading ~2.5x slow while Spark
-        # executor threads ran at full speed. The raw calibration numbers
-        # ride in the JSON; adjudication belongs to scripts/ab_pair.py.
-        loaded = this_hw > 1.2 * IDLE_CALIBRATION_SEC or (
-            pair_hw is not None and pair_hw > 1.2 * IDLE_CALIBRATION_SEC
-        )
-        flagged = []
-        for name, t in timings.items():
-            t0 = pair.get("queries", {}).get(name)
-            if t0 and cpus > pair.get("cpus", 0) and t > 2.0 and t > 1.3 * t0:
-                flagged.append(
-                    {
-                        "query": name,
-                        f"cpus{pair['cpus']}": t0,
-                        f"cpus{cpus}": t,
-                        # advisory: the probe is single-thread and this
-                        # box slows the foreground thread independently
-                        # of the executor pool (BENCH/BASELINE.md r4)
-                        "tenancy_suspect_advisory": loaded,
-                    }
-                )
-        result["anti_scaling"] = {
-            "pair": pair_path,
-            "rule": "t_big > 1.3 * t_small and t_big > 2s",
-            "calibration": {
-                "idle_sec": IDLE_CALIBRATION_SEC,
-                "this_window_sec": this_hw,
-                "pair_window_sec": pair_hw,
-                "window_loaded_advisory": loaded,
-            },
-            "note": (
-                "ADVISORY ONLY: the idle reference is a per-box constant"
-                " and the single-thread probe can read slow while the"
-                " executor pool runs at full speed (and vice versa) —"
-                " adjudicate any flag with scripts/ab_pair.py's"
-                " interleaved A/B/A before treating it as structural"
-            ),
-            "flagged": flagged,
-        }
 
     print(json.dumps(result))
     spark.stop()

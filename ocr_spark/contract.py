@@ -3610,12 +3610,11 @@ def _cached_vec_index(spark, sf, suffix: str, **build_kwargs):
 
     The artifact path is keyed by the sanitized sf dir, the build-params
     suffix, AND a filesystem fingerprint (size + mtime) of the source
-    embeddings parquet — the soak.py cache-key lesson extended: a
-    regenerated corpus under the SAME path must invalidate the artifact,
-    or stale codes would hash-mismatch the oracle's fresh replay. The
-    fingerprint is a driver-side stat call, no Spark job. A valid
-    existing artifact is REOPENED, not rebuilt — the artifact's
-    contract."""
+    embeddings parquet: a regenerated corpus under the SAME path must
+    invalidate the artifact, or stale codes would hash-mismatch the
+    oracle's fresh replay. The fingerprint is a driver-side stat call, no
+    Spark job. A valid existing artifact is REOPENED, not rebuilt — the
+    artifact's contract."""
     import tempfile
 
     from .sources.vecindex import build_vector_index, open_vector_index

@@ -1,16 +1,1 @@
 """Native Column-expression helpers (JVM-side, whole-stage codegen)."""
-
-from .box_functions import (
-    box_area,
-    box_center_in_region,
-    box_dezoom,
-    box_iou_cols,
-    box_size_filter,
-    xywh_to_xyxy,
-    xyxy_to_xywh,
-)
-from .text_functions import (
-    clean_text_expr,
-    normalized_edit_distance,
-    strip_eos_token,
-)

@@ -1,8 +1,7 @@
-"""Text cleaners as native Column expressions (SURVEY.md §2.9 F4/F1/P6).
+"""Text cleaners as native Column expressions (SURVEY.md §2.9 F4).
 
-The reference's regex cleaners (/root/reference/utils/text/cleaners.py:83-269)
-map 1:1 onto regexp_replace/lower/trim; the normalized edit distance used at
-inference (base_ocr.py:718) is the builtin levenshtein / length(truth).
+The reference's whitespace/case cleaners (utils/text/cleaners.py) map 1:1
+onto regexp_replace/lower/trim.
 """
 
 from __future__ import annotations
@@ -15,32 +14,3 @@ def clean_text_expr(col, *, lower: bool = True) -> Column:
     if lower:
         c = F.lower(c)
     return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
-def strip_eos_token(col, token: str = "</s>") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.replace(c, F.lit(token), F.lit("")))
-
-
-def normalized_edit_distance(a, b) -> Column:
-    """edit_distance(normalize=True) builtin case: levenshtein/len(truth);
-    empty truth falls back to (distance != 0) like the reference kernel —
-    and x/0 would be a hard ANSI-mode abort, not a NULL."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    lev = F.levenshtein(a, b)
-    return F.when(F.length(b) > 0, lev / F.length(b)).otherwise(
-        (lev != 0).cast("double")
-    )
-
-
-def remove_urls_expr(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"[a-z]+://\S+", "")
-
-
-def emission_filter_expr(text_col: str = "text") -> Column:
-    """Batch form of the P6 emission gates that are pure SQL: non-empty,
-    multi-word, contains a letter (base_ocr.py:693-697)."""
-    t = F.trim(F.replace(F.col(text_col), F.lit("</s>"), F.lit("")))
-    return (F.length(t) > 0) & t.contains(" ") & t.rlike("[a-zA-Z]")

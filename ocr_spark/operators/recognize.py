@@ -258,9 +258,7 @@ def crnn_train_bank(parts: DataFrame, *, noise_milli: int = 50) -> DataFrame:
             ]
             yield pd.DataFrame(rows, columns=["char", "pos", "ink", "n"])
 
-    from ..plans.session import widen as _widen
-
-    partials = _widen(parts.select("p_partkey", "p_name")).mapInPandas(
+    partials = widen(parts.select("p_partkey", "p_name")).mapInPandas(
         gen, schema=TRAIN_SCHEMA
     )
     return partials.groupBy("char", "pos").agg(
@@ -340,9 +338,7 @@ def crnn_train_bank_multifont(parts: DataFrame, *, noise_milli: int = 50) -> Dat
             ]
             yield pd.DataFrame(rows, columns=["font", "char", "pos", "ink", "n"])
 
-    from ..plans.session import widen as _widen
-
-    partials = _widen(parts.select("p_partkey", "p_name")).mapInPandas(
+    partials = widen(parts.select("p_partkey", "p_name")).mapInPandas(
         gen, schema=MULTIFONT_TRAIN_SCHEMA
     )
     return partials.groupBy("font", "char", "pos").agg(

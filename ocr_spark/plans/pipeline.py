@@ -163,64 +163,71 @@ def run_extract_job(
         decode_method=decode_method,
     ).withColumn("partition_id", F.spark_partition_id())
 
-    gated = None
-    n_gated = 0
+    # the extraction output feeds the gate predicates AND both the
+    # kept/gated splits: persist so the python stage runs once, and drop
+    # the cache once the lineage append (its last reader) is done
+    cached = None
     if quality_gate or dedup_threshold is not None:
-        # the extraction output feeds the gate predicates AND both the
-        # kept/gated splits: persist so the python stage runs once
-        extracted = extracted.persist()
-        kept = extracted
-        if quality_gate:
-            from ..operators.corpus_filters import gopher_rules
+        cached = extracted.persist()
+    try:
+        gated = None
+        n_gated = 0
+        if cached is not None:
+            kept = cached
+            if quality_gate:
+                from ..operators.corpus_filters import gopher_rules
 
-            failing = (
-                gopher_rules(kept.select(F.col("url").alias("doc_id"), "text"))
-                .where(~F.col("passes"))
-                .select(F.col("doc_id").alias("url"))
-            )
-            kept = kept.join(failing, "url", "left_anti")
-        if dedup_threshold is not None:
-            from ..operators.dedup import cross_corpus_jaccard_dedup
+                failing = (
+                    gopher_rules(kept.select(F.col("url").alias("doc_id"), "text"))
+                    .where(~F.col("passes"))
+                    .select(F.col("doc_id").alias("url"))
+                )
+                kept = kept.join(failing, "url", "left_anti")
+            if dedup_threshold is not None:
+                from ..operators.dedup import cross_corpus_jaccard_dedup
 
-            old = out_tbl.read(spark)
-            if old is not None:
-                survivors = cross_corpus_jaccard_dedup(
-                    kept.select(F.col("url").alias("doc_id"), "text"),
-                    old.select(F.col("url").alias("doc_id"), "text"),
-                    threshold=dedup_threshold,
-                ).select(F.col("doc_id").alias("url"))
-                kept = kept.join(survivors, "url", "left_semi")
-        gated = extracted.join(kept.select("url"), "url", "left_anti")
-        n_gated = gated.count()
-        extracted = kept
+                old = out_tbl.read(spark)
+                if old is not None:
+                    survivors = cross_corpus_jaccard_dedup(
+                        kept.select(F.col("url").alias("doc_id"), "text"),
+                        old.select(F.col("url").alias("doc_id"), "text"),
+                        threshold=dedup_threshold,
+                    ).select(F.col("doc_id").alias("url"))
+                    kept = kept.join(survivors, "url", "left_semi")
+            gated = cached.join(kept.select("url"), "url", "left_anti")
+            n_gated = gated.count()
+            extracted = kept
 
-    obs = Observation("extract_metrics")
-    extracted = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("n_spans").alias("spans"),
-        F.sum(F.length("text")).alias("chars"),
-    )
+        obs = Observation("extract_metrics")
+        extracted = extracted.observe(
+            obs,
+            F.count(F.lit(1)).alias("docs"),
+            F.sum("n_spans").alias("spans"),
+            F.sum(F.length("text")).alias("chars"),
+        )
 
-    commit_id = out_tbl.next_commit_id()
-    out_tbl.append(extracted, commit_id)
+        commit_id = out_tbl.next_commit_id()
+        out_tbl.append(extracted, commit_id)
 
-    # lineage derives from what was actually committed in THIS snapshot —
-    # read it back from the committed files so a mid-write crash can never
-    # mark unwritten urls as done. Gated urls join it from the persisted
-    # split: processed work that must never be re-extracted.
-    committed = spark.read.parquet(f"{out_tbl.data_dir}/commit={commit_id}")
-    new_lineage = lineage_of(committed, commit_id)
-    if gated is not None and n_gated:
-        new_lineage = new_lineage.unionByName(lineage_of(gated, commit_id))
-    lin_tbl.append(new_lineage, commit_id)
+        # lineage derives from what was actually committed in THIS snapshot —
+        # read it back from the committed files so a mid-write crash can never
+        # mark unwritten urls as done. Gated urls join it from the persisted
+        # split: processed work that must never be re-extracted.
+        committed = spark.read.parquet(f"{out_tbl.data_dir}/commit={commit_id}")
+        new_lineage = lineage_of(committed, commit_id)
+        if gated is not None and n_gated:
+            new_lineage = new_lineage.unionByName(lineage_of(gated, commit_id))
+        lin_tbl.append(new_lineage, commit_id)
+    finally:
+        if cached is not None:
+            cached.unpersist()
 
     # observe() counters land in a metrics table per commit (A8 analog:
     # the reference's stream counters, base_ocr.py:32-51)
-    metrics = dict(obs.get)
+    # an empty commit's sums are NULL: return the zeros the row stores
+    metrics = {k: int(v or 0) for k, v in obs.get.items()}
     metrics["gated"] = n_gated
-    row = {"commit_id": commit_id}
-    row.update({k: int(metrics[k] or 0) for k in ("docs", "spans", "chars", "gated")})
+    row = {"commit_id": commit_id, **metrics}
     metrics_tbl = ManifestTable(f"{out_root}/metrics")
     # a pandas frame goes through Arrow into a one-partition local relation:
     # one task, one file (a Python list is spread over every slot)

@@ -451,3 +451,30 @@ def test_quality_and_dedup_gates(spark, tmp_path):
         # gated mirrors are lineage-recorded too
         lin2 = ManifestTable(f"{out_root}/lineage").read(spark)
         assert lin2.select("url").distinct().count() == 2 * n_pages
+
+
+def test_gated_commit_frees_cache_and_returns_stored_zeros(spark, tmp_path):
+    """A gated commit unpersists the extraction it cached for the gates,
+    and a commit that keeps no doc (all gated, or all already covered)
+    returns the integer zeros its metrics row stores, not NULL sums."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # drop earlier tests' cached frames
+    pages = pages_df(spark, SF_SMOKE)
+    out_root = str(tmp_path / "wh")
+
+    def stored(commit_id):
+        path = f"{out_root}/metrics/data/commit={commit_id}"
+        return spark.read.parquet(path).collect()[0].asDict()
+
+    # the synthetic docs are short: the Gopher rules gate all 500
+    c1, m1 = run_extract_job(spark, pages, out_root, quality_gate=True)
+    assert cache_manager.isEmpty()
+    assert m1 == {"docs": 0, "spans": 0, "chars": 0, "gated": 500}
+    assert stored(c1) == {"commit_id": c1, **m1}
+
+    # lineage covers every url now: nothing to extract, nothing to gate
+    c2, m2 = run_extract_job(spark, pages, out_root, quality_gate=True)
+    assert cache_manager.isEmpty()
+    assert m2 == {"docs": 0, "spans": 0, "chars": 0, "gated": 0}
+    assert stored(c2) == {"commit_id": c2, **m2}
+    assert all(type(v) is int for v in (*m1.values(), *m2.values()))
