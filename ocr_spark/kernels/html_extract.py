@@ -1,18 +1,20 @@
 """HTML main-content extraction — the rebuild's "detect" stage (D8).
 
 Semantics parity (reference citations, behavior only — new implementation):
-- prepare_html regex boilerplate strip (remove head/script/style
-  [/table/aside/form/nav], first header, last footer, <li><a> link items,
-  unwrap div/span, drop self-closing tags, space before closing tags):
+- prepare_html regex boilerplate strip (remove head/script/style and
+  aside/form/nav/noscript/template/svg, first header, last footer, <li><a>
+  link items, unwrap div/span, drop self-closing tags, space before
+  closing tags):
   /root/reference/utils/text/parsers/html_parser.py:56-110,161-180
-- paragraph extraction over p/ul/ol/h1-h5[/table] in document order with
+- paragraph extraction over p/ul/ol/h1-h5/table in document order with
   nested-tag decomposition, section (h1-h5) stack tracking, whitespace
   collapse, table parsing with constant-column dedup, list parsing:
   html_parser.py:118-159,183-227
 - title extraction: html_parser.py:52-54
 
 The reference uses BeautifulSoup/lxml; this implementation is a from-scratch
-stdlib ``html.parser`` DOM walk (no third-party parser in the sandbox), with
+DOM walk over a one-regex tokenizer (``parse_dom``; no third-party parser),
+differential-tested against a stdlib ``html.parser`` tree builder and with
 identical outputs pinned by golden tests on the synthesized pages corpus.
 
 Additionally (BASELINE.json north_star): per-paragraph text-density and
@@ -27,7 +29,6 @@ from html.parser import HTMLParser as _StdHTMLParser
 
 _TITLE_RE = re.compile(r"\<title\>(.*?)\<\/title\>", re.DOTALL)
 _WHITESPACE_RE = re.compile(r"\s+")
-_LINK_RE = re.compile(r'<a [^>]*?href\=([^>\s]+)[^>]*?>(.*?)</a>', re.DOTALL)
 _LINK_ITEM_RE = re.compile(r"<li\b[^>]*?>\s*<a\b[^>]*?>.*?</a>\s*</li>", re.DOTALL)
 _DIV_SPAN_RE = re.compile(r"</?(?:div|span)[^>]*?>")
 _SELF_CLOSING_RE = re.compile(r"<[^>]+?/>")
@@ -36,7 +37,16 @@ _VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
 
-_TARGET_TAGS = ("p", "ul", "ol", "h1", "h2", "h3", "h4", "h5")
+# elements dropped whole with their content. The reference strips
+# head/script/style (html_parser.py:74); aside/form/nav are boilerplate,
+# and noscript/template/svg are content the browser never renders as page
+# text (fallback "enable javascript" notes, inert DOM fragments, chart
+# labels), which would otherwise leak verbatim into extraction.
+_STRIP_TAGS = (
+    "head", "script", "style", "aside", "form", "nav", "noscript", "template", "svg"
+)
+
+_TARGET_TAGS = ("p", "ul", "ol", "h1", "h2", "h3", "h4", "h5", "table")
 
 
 def extract_title(html: str):
@@ -58,80 +68,20 @@ def _remove_tags(html: str, tags, mode: str = "all") -> str:
     return html
 
 
-def prepare_html(
-    html: str,
-    *,
-    skip_header: bool = True,
-    skip_footer: bool = True,
-    skip_aside: bool = True,
-    skip_nav: bool = True,
-    skip_table: bool = False,
-    skip_form: bool = True,
-    skip_inert: bool = True,
-    skip_link_item: bool = True,
-    origin: str | None = None,
-    simplify: bool = True,
-    links: dict | None = None,
-):
-    """Strip boilerplate; returns (title, cleaned_html) (html_parser.py:56-93).
-
-    ``links`` is a per-document link-registry dict (the reference keeps a
-    module-global one at html_parser.py:20; per-call keeps us deterministic
-    and executor-safe)."""
-    tags = ["head", "script", "style"]
-    if skip_table:
-        tags.append("table")
-    if skip_aside:
-        tags.append("aside")
-    if skip_form:
-        tags.append("form")
-    if skip_nav:
-        tags.append("nav")
-    if skip_inert:
-        # content the BROWSER never renders as page text: <template> is an
-        # inert DOM fragment, <noscript> is fallback boilerplate ("enable
-        # javascript"), <svg> text nodes are chart labels — all three leak
-        # verbatim into extraction otherwise. The reference strips only
-        # head/script/style (html_parser.py:74); like skip_nav/skip_form
-        # this is a flagged extension, off -> reference parity.
-        tags.extend(["noscript", "template", "svg"])
-
+def prepare_html(html: str):
+    """Strip boilerplate; returns (title, cleaned_html) (html_parser.py:56-93):
+    the _STRIP_TAGS elements, the first <header>, the last <footer> and
+    <li><a> link items go, div/span are unwrapped, self-closing tags
+    dropped."""
     title = extract_title(html)
-    html = _remove_tags(html, tags)
-    if skip_header:
-        html = _remove_tags(html, ["header"], mode="first")
-    if skip_footer:
-        html = _remove_tags(html, ["footer"], mode="last")
-    if skip_link_item:
-        html = _LINK_ITEM_RE.sub("", html)
-    if simplify:
-        html = _DIV_SPAN_RE.sub("", html)
-        html = _SELF_CLOSING_RE.sub("", html)
-
-    if origin:
-        if links is None:
-            links = {}
-        html = re.sub(r"\[\d+\]", "", html)
-        html = _LINK_RE.sub(lambda m: _add_link_ref(m, origin, links), html)
-
+    html = _remove_tags(html, _STRIP_TAGS)
+    html = _remove_tags(html, ["header"], mode="first")
+    html = _remove_tags(html, ["footer"], mode="last")
+    html = _LINK_ITEM_RE.sub("", html)
+    html = _DIV_SPAN_RE.sub("", html)
+    html = _SELF_CLOSING_RE.sub("", html)
     html = html.replace("</", " </")
     return title, html
-
-
-def _add_link_ref(match, origin, links):
-    link = match.group(1).strip('"')
-    if not link.startswith("http"):
-        link = origin + link
-    if link not in links:
-        links[link] = len(links) + 1
-    text = match.group(2)
-    if "<" not in text:
-        return "<p>{} [{}]</p>".format(text, links[link])
-    if "</h" in text:
-        return text.replace("</h", " [{}] </h".format(links[link]), 1)
-    if "</p" in text:
-        return text.replace("</p", " [{}] </p".format(links[link]), 1)
-    return text + " [{}] ".format(links[link])
 
 
 class _Node:
@@ -204,6 +154,7 @@ class _TreeBuilder(_StdHTMLParser):
 
 
 def _stdlib_parse_dom(html: str) -> _Node:
+    """The stdlib state-machine parse: the tree parse_dom must reproduce."""
     builder = _TreeBuilder()
     builder.feed(html)
     builder.close()
@@ -228,7 +179,7 @@ _TAG_RE = re.compile(
 _RAWTEXT_TAGS = frozenset(("script", "style"))
 
 
-def fast_parse_dom(html: str) -> _Node:
+def parse_dom(html: str) -> _Node:
     import html as _html
 
     root = _Node("[document]")
@@ -293,15 +244,6 @@ def fast_parse_dom(html: str) -> _Node:
         elif name not in _VOID_TAGS and not self_closing:
             stack.append(node)
     return root
-
-
-def parse_dom(html: str) -> _Node:
-    try:
-        return fast_parse_dom(html)
-    except Exception:
-        # any surprise in the fast path degrades to the stdlib state machine,
-        # never to a task failure
-        return _stdlib_parse_dom(html)
 
 
 def _iter_nodes(node):
@@ -432,15 +374,11 @@ def _parse_title_stack(node, titles):
     return titles
 
 
-def extract_paragraphs(html: str, *, title: str = "html", skip_table: bool = False):
+def extract_paragraphs(html: str, *, title: str = "html"):
     """Walk target tags in document order, skipping tags nested inside an
     already-consumed one (html_parser.py:118-159 decompose semantics)."""
-    tags = list(_TARGET_TAGS)
-    if not skip_table:
-        tags.append("table")
-
     root = parse_dom(html)
-    targets = _find_all(root, tags)
+    targets = _find_all(root, _TARGET_TAGS)
     consumed: set[int] = set()
 
     titles: list[str] = []
@@ -509,7 +447,7 @@ def render_document(paragraphs) -> str:
     return "\n\n".join(render_paragraph(p) for p in paragraphs)
 
 
-def extract_page(html_bytes: bytes, *, origin: str | None = None, max_link_density: float | None = None, **opts):
+def extract_page(html_bytes: bytes, *, max_link_density: float | None = None):
     """Full detect stage over one page: bytes -> (title, paragraphs, text).
 
     ``max_link_density`` optionally drops high-link-density paragraphs (the
@@ -520,7 +458,7 @@ def extract_page(html_bytes: bytes, *, origin: str | None = None, max_link_densi
 
     html, _, _ = decode_bytes(html_bytes)  # BOM/meta-charset aware (crawl
     # pages are ~10-20% non-UTF-8); valid UTF-8 decodes exactly as before
-    title, cleaned = prepare_html(html, origin=origin, **opts)
+    title, cleaned = prepare_html(html)
     paragraphs = extract_paragraphs(cleaned, title=title or "html")
     if max_link_density is not None:
         paragraphs = [p for p in paragraphs if p["link_density"] <= max_link_density]

@@ -2,7 +2,7 @@
 
 Semantics parity (reference citations, behavior only — new implementation):
 - regex cleaners (collapse_whitespace, lowercase, strip, remove/detach
-  punctuation, remove_urls/files/markdown/control/accents, repetitions):
+  punctuation, remove_urls):
   /root/reference/utils/text/cleaners.py:83-269
 - split_sentences with acronym/quote/enumeration repairs:
   /root/reference/utils/text/text_processing.py:228-296,388-391
@@ -24,13 +24,11 @@ from __future__ import annotations
 
 import collections
 import re
-import unicodedata
 
 import numpy as np
 
 WHITESPACE_RE = re.compile(r"\s+")
 URL_RE = re.compile(r"[a-z]+://[\S\n]+")
-FILE_RE = re.compile(r"\S+\.(?:pdf|docx|txt|md|html)\b")
 PUNCTUATION = "_!?.,’“”‚‘—–()[]{}:;'\"`+-*/^=\\<>&#$%@¿′″·§~"
 
 
@@ -56,14 +54,6 @@ def remove_urls(text: str) -> str:
     return URL_RE.sub("", text)
 
 
-def remove_files(text: str) -> str:
-    return FILE_RE.sub("", text)
-
-
-def remove_markdown(text: str) -> str:
-    return re.sub(r"\*\*(.*)\*\*", r"\1", text)
-
-
 def remove_punctuation(text: str, punctuation: str = PUNCTUATION) -> str:
     return "".join(c for c in text if c not in punctuation)
 
@@ -72,30 +62,6 @@ def detach_punctuation(text: str, punctuation: str = PUNCTUATION) -> str:
     for punct in punctuation:
         text = text.replace(punct, " {} ".format(punct))
     return text.strip()
-
-
-def remove_control(text: str) -> str:
-    return "".join(
-        c
-        for c in text
-        if c in ("\t", "\n", "\r", " ") or c.isalnum() or not unicodedata.category(c).startswith("C")
-    )
-
-
-def remove_accents(text: str) -> str:
-    text = unicodedata.normalize("NFD", text)
-    return "".join(c for c in text if unicodedata.category(c) != "Mn")
-
-
-def collapse_repetitions(text: str, max_repetition: int) -> str:
-    if not text:
-        return text
-    keep, count = [text[0]], 1
-    for c in text[1:]:
-        count = 1 if c != keep[-1] else count + 1
-        if count <= max_repetition:
-            keep.append(c)
-    return "".join(keep)
 
 
 # ---------------------------------------------------------------- sentences

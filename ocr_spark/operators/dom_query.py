@@ -9,9 +9,10 @@ against the same tree -> (url, selector, match_idx, tag, text) rows.
 
 Plan shape: ONE narrow Arrow stage (mapInPandas), zero exchanges. Each
 page's DOM is parsed once no matter how many selectors are evaluated;
-selectors are parsed once per executor (closure), not per row. Non-HTML
-payloads (PDF/image/docx/%OCRPAYLOAD%/plain text) yield no rows — the
-same byte-magic dispatch order as the extraction job.
+selectors are parsed once per executor (closure), not per row. A page is
+queried iff the extraction job's router (``operators.extract.page_route``)
+sends it down the html route; PDF/image/docx/%OCRPAYLOAD%/plain-text pages
+yield no rows.
 """
 
 from __future__ import annotations
@@ -19,8 +20,6 @@ from __future__ import annotations
 from typing import Iterable
 
 from pyspark.sql import DataFrame
-
-from ..sources.pages import PAYLOAD_MAGIC
 
 SELECT_SCHEMA = "url string, selector string, match_idx int, tag string, text string"
 
@@ -36,26 +35,17 @@ def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
         import pandas as pd
 
         from ..kernels.css_select import css_select, parse_selector
-        from ..kernels.encoding import decode_bytes, detect_bom
+        from ..kernels.encoding import decode_bytes
         from ..kernels.html_extract import _extract_text, parse_dom
-        from ..kernels.md_extract import looks_like_html
+        from .extract import page_route
 
         parsed = [(s, parse_selector(s)) for s in sels]
         for pdf in batches:
             out = {"url": [], "selector": [], "match_idx": [], "tag": [], "text": []}
             for url, html in zip(pdf["url"], pdf["html"]):
                 try:
-                    blob = bytes(html) if html is not None else b""
-                    if detect_bom(blob) is not None:
-                        blob = decode_bytes(blob)[0].encode("utf-8")
-                    if (
-                        blob.startswith(b"%PDF-")
-                        or blob[:4] == b"\x89PNG"
-                        or blob[:2] == b"\xff\xd8"
-                        or blob[:2] == b"PK"
-                        or blob.startswith(PAYLOAD_MAGIC)
-                        or not looks_like_html(blob)
-                    ):
+                    route, blob = page_route(html)
+                    if route != "html":
                         continue
                     root = parse_dom(decode_bytes(blob)[0])
                     for sel, groups in parsed:

@@ -8,6 +8,10 @@ Per-document kernels (combine_boxes, CTC decode) are numpy inside the batch;
 CTC decoding is batched across every line of every document in the Arrow
 chunk (the analog of the reference's pad_batch at base_ocr.py:210-211).
 
+Every page goes through one router, :func:`page_route` (the reference's
+``parse_document`` dispatch, parsers/__init__.py:53-201), which names its
+route: html | pdf | image | docx | payload | code | md | binary.
+
 Reference path reproduced (behavior only):
 - HTML pages: prepare_html + extract_paragraphs
   (/root/reference/utils/text/parsers/html_parser.py:26-227) — kernel D8.
@@ -66,10 +70,6 @@ def _get_vocab():
     return _VOCAB, _VOCAB_INDEX
 
 
-def _sanitize(text: str, index: dict) -> str:
-    return ctc_kernel.sanitize_for_vocab(text, index)
-
-
 def _extract_html_doc(html: bytes):
     from ..kernels.html_extract import render_paragraph
 
@@ -83,10 +83,9 @@ def _extract_html_doc(html: bytes):
     return title or "", text, spans
 
 
-def _extract_md_doc(blob: bytes):
+def _extract_md_doc(text_in: str):
     """Markdown / plain-text page (S5 dispatch fallback): same span shape
     as the HTML path; title = first heading if any."""
-    text_in = decode_bytes(blob)[0]
     paragraphs = parse_markdown(text_in)
     spans = _banded_spans(
         [
@@ -106,26 +105,30 @@ def _extract_md_doc(blob: bytes):
     return title, render_md_document(paragraphs), spans
 
 
+def _span(seq, kind, section, text, box, score=1.0):
+    """One SPAN_STRUCT record: a paragraph's text and its (x0, y0, x1, y1)."""
+    x0, y0, x1, y1 = (float(v) for v in box)
+    return {
+        "seq": seq,
+        "kind": kind,
+        "section": section,
+        "text": text,
+        "x0": x0,
+        "y0": y0,
+        "x1": x1,
+        "y1": y1,
+        "score": score,
+    }
+
+
 def _banded_spans(items):
     """Document-order pseudo-box spans (FIXTURES.md §1): items of
     (kind, section, text) -> span dicts."""
-    spans = []
     n = max(len(items), 1)
-    for i, (kind, section, text) in enumerate(items):
-        spans.append(
-            {
-                "seq": i,
-                "kind": kind,
-                "section": section,
-                "text": text,
-                "x0": 0.05,
-                "y0": i / n,
-                "x1": 0.95,
-                "y1": (i + 1) / n,
-                "score": 1.0,
-            }
-        )
-    return spans
+    return [
+        _span(i, kind, section, text, (0.05, i / n, 0.95, (i + 1) / n))
+        for i, (kind, section, text) in enumerate(items)
+    ]
 
 
 def _extract_docx_doc(blob: bytes):
@@ -138,11 +141,13 @@ def _extract_docx_doc(blob: bytes):
     return "", "\n\n".join(p["text"] for p in paragraphs), spans
 
 
-def _extract_code_doc(text_in: str, lang: str):
+def _extract_code_doc(source: tuple[str, str]):
     """S5 py/java routes: 'type: code' paragraphs (reference
-    py_parser.py:15-25 split / java_parser.py:13-18 whole-file)."""
+    py_parser.py:15-25 split / java_parser.py:13-18 whole-file);
+    ``source`` is the router's (text, lang)."""
     from ..kernels.doc_parsers import parse_java_source, parse_python_source
 
+    text_in, lang = source
     if lang == "python":
         paragraphs = parse_python_source(text_in)
     else:
@@ -152,15 +157,17 @@ def _extract_code_doc(text_in: str, lang: str):
     return "", "\n\n".join(p["text"] for p in paragraphs), spans
 
 
-def _extract_image_doc(blob: bytes):
+def _extract_image_doc(image: tuple[bytes, str]):
     """REAL image page (PNG/JPEG of rendered text): decode the codec
     (kernels/imagecodec.py), detect word boxes from ink projections and
     recognize glyph cells by template matching (kernels/pixel_ocr.py) —
-    the detect->recognize path on actual pixels, no fixture logits."""
+    the detect->recognize path on actual pixels, no fixture logits.
+    ``image`` is the router's (bytes, codec)."""
     from ..kernels.imagecodec import jpeg_decode, png_decode
     from ..kernels.pixel_ocr import ocr_page
 
-    img = png_decode(blob) if blob[:4] == b"\x89PNG" else jpeg_decode(blob)
+    blob, codec = image
+    img = png_decode(blob) if codec == "png" else jpeg_decode(blob)
     if img.ndim == 3:
         img = img.mean(axis=2).astype("uint8")
 
@@ -176,24 +183,11 @@ def _extract_image_doc(blob: bytes):
         cur["x1"] = max(cur["x1"], x1)
         cur["y1"] = max(cur["y1"], y1)
 
-    spans = []
-    texts = []
-    for i, line in enumerate(lines):
-        text = " ".join(line["words"])
-        texts.append(text)
-        spans.append(
-            {
-                "seq": i,
-                "kind": "ocr",
-                "section": "",
-                "text": text,
-                "x0": line["x0"],
-                "y0": line["y0"],
-                "x1": line["x1"],
-                "y1": line["y1"],
-                "score": 1.0,
-            }
-        )
+    texts = [" ".join(line["words"]) for line in lines]
+    spans = [
+        _span(i, "ocr", "", text, (line["x0"], line["y0"], line["x1"], line["y1"]))
+        for i, (line, text) in enumerate(zip(lines, texts))
+    ]
     return "", "\n".join(texts), spans
 
 
@@ -224,22 +218,16 @@ def _extract_pdf_doc(blob: bytes):
         best = max(p["font_size"] for p in kept)
         title = next(p["text"] for p in kept if p["font_size"] == best)
 
-    spans = []
-    for i, para in enumerate(kept):
-        box = [float(v) for v in para["box"]]
-        spans.append(
-            {
-                "seq": i,
-                "kind": "footnote" if para.get("is_footnote") else "pdf",
-                "section": f"page {para['page']}",
-                "text": para["text"],
-                "x0": box[0],
-                "y0": box[1],
-                "x1": box[2],
-                "y1": box[3],
-                "score": 1.0,
-            }
+    spans = [
+        _span(
+            i,
+            "footnote" if para.get("is_footnote") else "pdf",
+            f"page {para['page']}",
+            para["text"],
+            para["box"],
         )
+        for i, para in enumerate(kept)
+    ]
     return title, "\n\n".join(p["text"] for p in kept), spans
 
 
@@ -283,7 +271,8 @@ def _plan_payload_doc(html: bytes):
         for r in row_order:
             members = idx_groups[r] if r < len(idx_groups) else []
             members = sorted(members, key=lambda i: word_boxes[i, 0])
-            line_text = _sanitize(" ".join(word_texts[i] for i in members), index)
+            words = " ".join(word_texts[i] for i in members)
+            line_text = ctc_kernel.sanitize_for_vocab(words, index)
             jobs.append(ctc_kernel.synth_logits_for_text(line_text, vocab))
             line_job_ids.append(len(jobs) - 1)
         paragraphs.append(
@@ -316,54 +305,83 @@ def _decode_jobs(all_jobs, method: str = "greedy", num_beams: int = 10):
     return texts, scores
 
 
+def page_route(blob) -> tuple[str, object]:
+    """One page's bytes -> (route, payload): the S5 dispatch, made here only.
+
+    Routes in sniff order: pdf, image (PNG/JPEG), docx, payload
+    (%OCRPAYLOAD%), html; a text page without markup is code (python/java)
+    or md, and anything else is binary. BOM-marked text (UTF-16/32 pages)
+    is decoded and re-encoded as UTF-8 first: the byte sniffers cannot see
+    through NUL-interleaved encodings. The payload is what the route's
+    kernel reads: the (re-encoded) bytes, except an image's
+    ``(bytes, "png"|"jpeg")``, a code page's ``(text, lang)`` and a
+    markdown page's text (a text page is decoded once, here).
+    """
+    blob = bytes(blob) if blob is not None else b""
+    if detect_bom(blob) is not None:
+        blob = decode_bytes(blob)[0].encode("utf-8")
+    if blob.startswith(b"%PDF-"):
+        return "pdf", blob
+    if blob[:4] == b"\x89PNG":
+        return "image", (blob, "png")
+    if blob[:2] == b"\xff\xd8":
+        return "image", (blob, "jpeg")
+    if looks_like_docx(blob):
+        return "docx", blob
+    if blob.startswith(PAYLOAD_MAGIC):
+        return "payload", blob
+    if looks_like_html(blob):
+        return "html", blob
+    if mostly_text(blob):
+        text = decode_bytes(blob)[0]
+        lang = sniff_code_lang(text)
+        return ("code", (text, lang)) if lang else ("md", text)
+    return "binary", blob
+
+
+def _extract_binary_doc(blob: bytes):
+    return "", "", []  # binary junk -> empty
+
+
+# route -> (title, text, spans) kernel; the payload route is planned apart
+# for the chunk-wide CTC decode. Each kernel looks its own kernels up by
+# name when it runs, so a patched module attribute (extract_page,
+# decode_bytes, the lazily imported codecs) is the one that gets called.
+_ROUTE_KERNELS = {
+    "html": _extract_html_doc,
+    "pdf": _extract_pdf_doc,
+    "image": _extract_image_doc,
+    "docx": _extract_docx_doc,
+    "code": _extract_code_doc,
+    "md": _extract_md_doc,
+    "binary": _extract_binary_doc,
+}
+
+
 def extract_batch(pdf, decode_method: str = "greedy"):
     """pandas chunk of pages -> pandas chunk of extracted documents."""
     import pandas as pd
 
-    html_col = pdf["html"]
     # phase 1: plan every doc; collect all payload line-decode jobs
     plans = []
     all_jobs: list = []
-    for html in html_col:
+    for html in pdf["html"]:
         # per-document guard: at 10^12-doc scale a single malformed page must
         # degrade to an empty extraction, never fail the task (the lineage
         # row still commits, so the url is not retried forever)
         try:
-            blob = bytes(html) if html is not None else b""
-            # BOM-marked text (UTF-16/32 crawl pages): the byte-level tag
-            # sniffers below can't see through NUL-interleaved encodings,
-            # so decode first and dispatch on the UTF-8 re-encoding
-            if detect_bom(blob) is not None:
-                blob = decode_bytes(blob)[0].encode("utf-8")
-            if blob.startswith(b"%PDF-"):
-                plans.append(("html", _extract_pdf_doc(blob)))
-            elif blob[:4] == b"\x89PNG" or blob[:2] == b"\xff\xd8":
-                plans.append(("html", _extract_image_doc(blob)))
-            elif looks_like_docx(blob):
-                plans.append(("html", _extract_docx_doc(blob)))
-            elif blob.startswith(PAYLOAD_MAGIC):
-                paragraphs, jobs = _plan_payload_doc(blob)
+            route, payload = page_route(html)
+            if route == "payload":
+                paragraphs, jobs = _plan_payload_doc(payload)
                 base = len(all_jobs)
                 for para in paragraphs:
                     para["line_job_ids"] = [base + j for j in para["line_job_ids"]]
                 all_jobs.extend(jobs)
-                plans.append(("payload", paragraphs))
-            elif looks_like_html(blob):
-                plans.append(("html", _extract_html_doc(blob)))
-            elif mostly_text(blob):
-                # S5 dispatch: code / markdown / plain-text page (the
-                # reference's py/java/md/txt parser routes,
-                # parsers/__init__.py:53-201)
-                text_in = decode_bytes(blob)[0]
-                lang = sniff_code_lang(text_in)
-                if lang:
-                    plans.append(("html", _extract_code_doc(text_in, lang)))
-                else:
-                    plans.append(("html", _extract_md_doc(blob)))
+                plans.append((route, paragraphs))
             else:
-                plans.append(("html", ("", "", [])))  # binary junk -> empty
+                plans.append((route, _ROUTE_KERNELS[route](payload)))
         except Exception:
-            plans.append(("html", ("", "", [])))
+            plans.append(("binary", ("", "", [])))
 
     # phase 2: one batched CTC decode for the whole chunk
     line_texts, line_scores = _decode_jobs(all_jobs, method=decode_method)
@@ -378,8 +396,8 @@ def extract_batch(pdf, decode_method: str = "greedy"):
         "spans": [],
         "n_spans": [],
     }
-    for kind, plan in plans:
-        if kind == "html":
+    for route, plan in plans:
+        if route != "payload":
             title, text, spans = plan
         else:
             title, spans, para_texts = "", [], []
@@ -388,20 +406,8 @@ def extract_batch(pdf, decode_method: str = "greedy"):
                 scores = [float(line_scores[j]) for j in para["line_job_ids"]]
                 para_text = " \n".join(texts)  # base_ocr.py:232
                 para_texts.append(para_text)
-                box = para["box"]
-                spans.append(
-                    {
-                        "seq": i,
-                        "kind": "ocr",
-                        "section": "",
-                        "text": para_text,
-                        "x0": float(box[0]),
-                        "y0": float(box[1]),
-                        "x1": float(box[2]),
-                        "y1": float(box[3]),
-                        "score": float(np.mean(scores)) if scores else 0.0,
-                    }
-                )
+                score = float(np.mean(scores)) if scores else 0.0
+                spans.append(_span(i, "ocr", "", para_text, para["box"], score))
             text = "\n\n".join(para_texts)
         out["title"].append(title)
         out["text"].append(text)

@@ -25,7 +25,6 @@ META_SCHEMA = (
     "blob_id long, n_bytes int, sha256 string, kind string, "
     "width int, height int, n_frames int"
 )
-FEATURE_SCHEMA = "blob_id long, feature array<float>, feat_norm double"
 VIDEO_META_SCHEMA = (
     "blob_id long, container string, major_brand string, timescale long, "
     "duration_ms long, track_no int, track_type string, codec string, "
@@ -568,33 +567,6 @@ def image_dhash(df: DataFrame, blob_col: str = "blob", id_col: str = "blob_id") 
             )
 
     return df.mapInPandas(gen, schema=DHASH_SCHEMA)
-
-
-def blob_features(df: DataFrame, blob_col: str = "blob", id_col: str = "blob_id", dim: int = 16) -> DataFrame:
-    """Feature-extraction stage shape: decode -> pooled feature vector.
-
-    Uses fake_decode; the batch shape (one Arrow chunk -> one numpy batch ->
-    vectorized pooling) is exactly what a real CNN/codec stage would use."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = [bytes(b) if b is not None else b"" for b in pdf[blob_col]]
-            imgs = np.stack([fake_decode(b, h=8, w=8, c=3) for b in blobs]) if blobs else np.zeros((0, 8, 8, 3))
-            # explicit size: reshape(0, -1) raises on empty batches
-            flat = imgs.reshape(len(blobs), 8 * 8 * 3).astype(np.float64) / 255.0
-            # mean-pool into `dim` buckets (stand-in for an embedding head)
-            pooled = flat.reshape(len(blobs), dim, -1).mean(axis=2).astype(np.float32)
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf[id_col].astype("int64"),
-                    "feature": [row.tolist() for row in pooled],
-                    "feat_norm": np.round(np.linalg.norm(pooled, axis=1).astype(np.float64), 6),
-                }
-            )
-
-    return df.mapInPandas(gen, schema=FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = "blob_id long, height int, width int, pixels array<int>"

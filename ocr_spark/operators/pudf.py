@@ -20,14 +20,6 @@ def lev_norm_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf("double")
-def text_f1_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Token-bag F1 (metrics.py:188-238) as a vectorized scalar UDF."""
-    from ..kernels.textproc import text_f1
-
-    return pd.Series([round(float(text_f1(x, y)[1]), 6) for x, y in zip(a, b)])
-
-
 @pandas_udf("int")
 def compress_milli_udf(texts: pd.Series) -> pd.Series:
     """zlib level-6 compression ratio in integer milli units:

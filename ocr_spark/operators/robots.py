@@ -173,23 +173,6 @@ def _rules_udf(agent: str):
     return parse
 
 
-def robots_rules(robots: DataFrame, *, agent: str = "*") -> DataFrame:
-    """(host, robots_txt) -> exploded rule table
-    (host, allow, prefix, anchored, like_pat, prefix_len)."""
-    parse = _rules_udf(agent)
-    return (
-        robots.select("host", F.explode(parse("robots_txt")).alias("r"))
-        .select(
-            "host",
-            F.col("r.allow").alias("allow"),
-            F.col("r.prefix").alias("prefix"),
-            F.col("r.anchored").alias("anchored"),
-            F.col("r.like_pat").alias("like_pat"),
-            F.col("r.prefix_len").alias("prefix_len"),
-        )
-    )
-
-
 # name must be EXACTLY 'robots' (quoted, or unquoted followed by a
 # delimiter — 'robots-verification' must not match); content accepts
 # quoted or unquoted (legal HTML) values

@@ -167,17 +167,6 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     )
 
 
-def syllable_count(word: Column) -> Column:
-    """Deterministic heuristic syllable count: vowel-group runs
-    ([aeiouy]+), minus one for a silent trailing 'e' when more than one
-    run exists, floored at 1.  Chosen for exact SQL portability (the
-    oracle re-derives it with regexp_extract_all), not phonetic truth —
-    the standard engineering stance for Flesch at corpus scale."""
-    runs = F.size(F.regexp_extract_all(word, F.lit("[aeiouy]+"), F.lit(0)))
-    silent_e = (word.endswith("e") & (runs > 1)).cast("int")
-    return F.greatest(F.lit(1), runs - silent_e)
-
-
 def readability_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Flesch reading ease + Flesch-Kincaid grade in EXACT integer
     micro-units (single-step BIGINT floor divisions, so the DuckDB

@@ -115,28 +115,41 @@ def dedup_texts_stateful(frames_df, *, max_emitted: int = 4096):
     )
 
 
-def run_demo(spark, texts, *, checkpoint_dir: str):
-    """Memory-sink micro-batch demo: feeds (stream_id, frame_id, text) rows
-    through the stateful dedup and returns the collected result."""
-    rows = [("s0", i, t) for i, t in enumerate(texts)]
-    src = spark.createDataFrame(rows, "stream_id string, frame_id long, text string")
-    # one-shot streaming over a file source
+def _drain(spark, rows, schema: str, op, *, checkpoint_dir: str, name: str, order_by: str):
+    """Memory-sink micro-batch harness: ``rows`` -> a one-file parquet
+    source under ``checkpoint_dir`` -> ``readStream`` -> ``op`` -> memory
+    sink ``name``, drained once with ``availableNow``; returns the sink's
+    rows sorted by ``order_by``."""
     import tempfile
 
-    path = tempfile.mkdtemp(prefix="stream_src_", dir=checkpoint_dir)
+    src = spark.createDataFrame(rows, schema)
+    path = tempfile.mkdtemp(prefix=f"{name}_src_", dir=checkpoint_dir)
     src.coalesce(1).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    dedup = dedup_texts_stateful(stream)
     q = (
-        dedup.writeStream.format("memory")
-        .queryName("dedup_demo")
+        op(spark.readStream.schema(src.schema).parquet(path))
+        .writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", f"{checkpoint_dir}/ckpt")
+        .option("checkpointLocation", f"{checkpoint_dir}/{name}_ckpt")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    return spark.sql("select * from dedup_demo order by frame_id").collect()
+    return spark.sql(f"select * from {name} order by {order_by}").collect()
+
+
+def run_demo(spark, texts, *, checkpoint_dir: str):
+    """Memory-sink micro-batch demo: feeds (stream_id, frame_id, text) rows
+    through the stateful dedup and returns the collected result."""
+    return _drain(
+        spark,
+        [("s0", i, t) for i, t in enumerate(texts)],
+        "stream_id string, frame_id long, text string",
+        dedup_texts_stateful,
+        checkpoint_dir=checkpoint_dir,
+        name="dedup_demo",
+        order_by="frame_id",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -324,25 +337,15 @@ def repetition_filter_stateful(frames_df, *, n_repeat=2, iou_threshold=0.5, max_
 def run_repetition_demo(spark, frames, *, checkpoint_dir: str):
     """Memory-sink micro-batch demo for the repetition filter: ``frames`` is
     [(stream_id, frame_id, [[x0,y0,x1,y1], ...]), ...]."""
-    import tempfile
-
-    src = spark.createDataFrame(
-        frames, "stream_id string, frame_id long, boxes array<array<double>>"
+    return _drain(
+        spark,
+        frames,
+        "stream_id string, frame_id long, boxes array<array<double>>",
+        repetition_filter_stateful,
+        checkpoint_dir=checkpoint_dir,
+        name="rep_demo",
+        order_by="frame_id, x0",
     )
-    path = tempfile.mkdtemp(prefix="rep_src_", dir=checkpoint_dir)
-    src.coalesce(1).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    q = (
-        repetition_filter_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("rep_demo")
-        .outputMode("append")
-        .option("checkpointLocation", f"{checkpoint_dir}/rep_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql("select * from rep_demo order by frame_id, x0").collect()
 
 
 # ---------------------------------------------------------------------------
@@ -412,25 +415,15 @@ def frame_dedup_stateful(frames_df, *, threshold: float = 0.9, tolerance: int = 
 def run_frame_dedup_demo(spark, frames, *, checkpoint_dir: str, threshold: float = 0.9):
     """Memory-sink micro-batch demo: ``frames`` is
     [(stream_id, frame_id, [sig floats...]), ...]."""
-    import tempfile
-
-    src = spark.createDataFrame(
-        frames, "stream_id string, frame_id long, sig array<double>"
+    return _drain(
+        spark,
+        frames,
+        "stream_id string, frame_id long, sig array<double>",
+        lambda stream: frame_dedup_stateful(stream, threshold=threshold),
+        checkpoint_dir=checkpoint_dir,
+        name="frame_dedup_demo",
+        order_by="frame_id",
     )
-    path = tempfile.mkdtemp(prefix="frame_src_", dir=checkpoint_dir)
-    src.coalesce(1).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(src.schema).parquet(path)
-    q = (
-        frame_dedup_stateful(stream, threshold=threshold)
-        .writeStream.format("memory")
-        .queryName("frame_dedup_demo")
-        .outputMode("append")
-        .option("checkpointLocation", f"{checkpoint_dir}/frame_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql("select * from frame_dedup_demo order by frame_id").collect()
 
 
 # ---------------------------------------------------------------------------

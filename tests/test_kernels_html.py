@@ -134,7 +134,7 @@ def test_fast_parser_matches_stdlib_on_corpus():
         text = html.decode("utf-8", errors="replace")
         title, cleaned = hx.prepare_html(text)
         root_slow = hx._stdlib_parse_dom(cleaned)
-        root_fast = hx.fast_parse_dom(cleaned)
+        root_fast = hx.parse_dom(cleaned)
 
         def flatten(node):
             out = []
@@ -186,7 +186,7 @@ def test_fast_parser_edge_parity_with_stdlib():
         return out
 
     for html in cases:
-        fast = flatten(hx.fast_parse_dom(html))
+        fast = flatten(hx.parse_dom(html))
         slow = flatten(hx._stdlib_parse_dom(html))
         assert fast == slow, (html, fast, slow)
 
@@ -199,14 +199,14 @@ def test_unterminated_script_not_leaked():
     assert "secret" not in text and "keep" in text
     # parity with stdlib on the raw fragment too
     frag = "<p>keep</p><script>var secret = 1;"
-    fast = hx.fast_parse_dom(frag)
+    fast = hx.parse_dom(frag)
     slow = hx._stdlib_parse_dom(frag)
     assert hx._raw_text(fast) == hx._raw_text(slow)
 
 
 def test_inert_content_stripped():
     """<template>/<noscript>/<svg> text must not leak into extraction
-    (browser-inert content); skip_inert=False restores reference parity."""
+    (browser-inert content)."""
     from ocr_spark.kernels.html_extract import extract_page
 
     html = (

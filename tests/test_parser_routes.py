@@ -1,6 +1,6 @@
-"""S5 dispatch routes added in round 2 (docx / python / java) + the ADVICE
-round-1 fixes (html sniff breadth, dice blank-frame parity, RepetitionGate
-eviction parity, IVF empty-table guard)."""
+"""S5 dispatch routes (the page router and the docx / python / java
+parsers) + the ADVICE round-1 fixes (html sniff breadth, dice blank-frame
+parity, RepetitionGate eviction parity, IVF empty-table guard)."""
 
 import numpy as np
 import pytest
@@ -141,3 +141,79 @@ def test_docx_and_code_pages_byte_identical(spark):
     assert j.where("text = expected").count() == 3
     kinds = {s.kind for r in out.collect() for s in r.spans}
     assert "code" in kinds and "text" in kinds
+
+
+def _stored_zip(name: str, data: bytes) -> bytes:
+    """A zip archive whose one member is stored uncompressed (not a docx)."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+        zf.writestr(name, data)
+    return buf.getvalue()
+
+
+_PY_SRC = "import os\n\ndef f():\n    return 1\n"
+_JAVA_SRC = "package a.b;\nimport java.util.List;\npublic class X {}\n"
+_MD_SRC = "# Notes\n\nplain markdown prose\n"
+_ZIP_PAGE = _stored_zip("chapter.html", b"<p>chapter one text</p>")
+
+
+def _route_cases():
+    from ocr_spark.kernels.imagecodec import jpeg_encode, png_encode
+    from ocr_spark.sources.pages import PAYLOAD_MAGIC
+
+    img = np.full((8, 8), 255, dtype=np.uint8)
+    docx = build_docx(["body one"])
+    payload = PAYLOAD_MAGIC + b'{"lines": []}'
+    html = b"<html><body><p>hello</p></body></html>"
+    junk = bytes(range(256)) * 4
+    return [
+        ("pdf", b"%PDF-1.4\n%junk", "pdf", b"%PDF-1.4\n%junk"),
+        ("png", png_encode(img), "image", (png_encode(img), "png")),
+        ("jpeg", jpeg_encode(img), "image", (jpeg_encode(img), "jpeg")),
+        ("docx", docx, "docx", docx),
+        ("payload", payload, "payload", payload),
+        ("html", html, "html", html),
+        ("utf16_bom_html", b"\xff\xfe" + html.decode().encode("utf-16-le"), "html", html),
+        ("python", _PY_SRC.encode(), "code", (_PY_SRC, "python")),
+        ("java", _JAVA_SRC.encode(), "code", (_JAVA_SRC, "java")),
+        ("markdown", _MD_SRC.encode(), "md", _MD_SRC),
+        ("binary", junk, "binary", junk),
+        ("empty", b"", "binary", b""),
+        ("none", None, "binary", b""),
+        ("stored_zip_html", _ZIP_PAGE, "html", _ZIP_PAGE),
+    ]
+
+
+@pytest.mark.parametrize(
+    "blob,route,payload",
+    [case[1:] for case in _route_cases()],
+    ids=[case[0] for case in _route_cases()],
+)
+def test_page_route(blob, route, payload):
+    from ocr_spark.operators.extract import page_route
+
+    assert page_route(blob) == (route, payload)
+
+
+def test_css_select_follows_the_page_router(spark):
+    """A page is DOM-queried iff the extraction job reads it as HTML: the
+    stored non-docx zip extracts its paragraph, so css_select sees it too."""
+    import pandas as pd
+
+    from ocr_spark.operators.dom_query import css_select_table
+    from ocr_spark.operators.extract import extract_batch
+
+    rows = [("zip", _ZIP_PAGE), ("pdf", b"%PDF-1.4 <p>not html</p>")]
+    extracted = extract_batch(
+        pd.DataFrame(
+            {"url": [u for u, _ in rows], "warc_ts": [None] * 2,
+             "lang": ["en"] * 2, "html": [h for _, h in rows]}
+        )
+    )
+    assert extracted["text"].tolist()[0] == "chapter one text"
+    df = spark.createDataFrame(rows, "url string, html binary")
+    got = css_select_table(df, ["p"]).collect()
+    assert [(r.url, r.tag, r.text) for r in got] == [("zip", "p", "chapter one text")]
