@@ -447,17 +447,19 @@ def render_document(paragraphs) -> str:
     return "\n\n".join(render_paragraph(p) for p in paragraphs)
 
 
-def extract_page(html_bytes: bytes, *, max_link_density: float | None = None):
-    """Full detect stage over one page: bytes -> (title, paragraphs, text).
+def extract_page(html: str | bytes, *, max_link_density: float | None = None):
+    """Full detect stage over one page: text or bytes -> (title, paragraphs,
+    text). Bytes are decoded BOM/meta-charset aware (crawl pages are ~10-20%
+    non-UTF-8); valid UTF-8 decodes exactly as before.
 
     ``max_link_density`` optionally drops high-link-density paragraphs (the
     north_star boilerplate classifier); None keeps the pure structural-strip
     golden semantics.
     """
-    from .encoding import decode_bytes
+    if not isinstance(html, str):
+        from .encoding import decode_bytes
 
-    html, _, _ = decode_bytes(html_bytes)  # BOM/meta-charset aware (crawl
-    # pages are ~10-20% non-UTF-8); valid UTF-8 decodes exactly as before
+        html = decode_bytes(html)[0]
     title, cleaned = prepare_html(html)
     paragraphs = extract_paragraphs(cleaned, title=title or "html")
     if max_link_density is not None:

@@ -35,7 +35,6 @@ def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
         import pandas as pd
 
         from ..kernels.css_select import css_select, parse_selector
-        from ..kernels.encoding import decode_bytes
         from ..kernels.html_extract import _extract_text, parse_dom
         from .extract import page_route
 
@@ -44,10 +43,10 @@ def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
             out = {"url": [], "selector": [], "match_idx": [], "tag": [], "text": []}
             for url, html in zip(pdf["url"], pdf["html"]):
                 try:
-                    route, blob = page_route(html)
+                    route, page = page_route(html)
                     if route != "html":
                         continue
-                    root = parse_dom(decode_bytes(blob)[0])
+                    root = parse_dom(page.text)
                     for sel, groups in parsed:
                         for k, node in enumerate(css_select(root, groups)):
                             out["url"].append(url)

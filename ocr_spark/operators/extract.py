@@ -70,10 +70,10 @@ def _get_vocab():
     return _VOCAB, _VOCAB_INDEX
 
 
-def _extract_html_doc(html: bytes):
+def _extract_html_doc(page: HtmlPage):
     from ..kernels.html_extract import render_paragraph
 
-    title, paragraphs, text = extract_page(html)
+    title, paragraphs, text = extract_page(page.text)
     spans = _banded_spans(
         [
             (para["type"], " > ".join(para.get("section", [])), render_paragraph(para))
@@ -305,6 +305,14 @@ def _decode_jobs(all_jobs, method: str = "greedy", num_beams: int = 10):
     return texts, scores
 
 
+class HtmlPage(bytes):
+    """The html route's payload: the page's bytes (a BOM page's re-encoded
+    as UTF-8), which it compares equal to, and ``text``, the router's one
+    decode of the page, which the HTML kernels read."""
+
+    text: str
+
+
 def page_route(blob) -> tuple[str, object]:
     """One page's bytes -> (route, payload): the S5 dispatch, made here only.
 
@@ -314,12 +322,15 @@ def page_route(blob) -> tuple[str, object]:
     is decoded and re-encoded as UTF-8 first: the byte sniffers cannot see
     through NUL-interleaved encodings. The payload is what the route's
     kernel reads: the (re-encoded) bytes, except an image's
-    ``(bytes, "png"|"jpeg")``, a code page's ``(text, lang)`` and a
-    markdown page's text (a text page is decoded once, here).
+    ``(bytes, "png"|"jpeg")``, an :class:`HtmlPage`, a code page's
+    ``(text, lang)`` and a markdown page's text. A text page is decoded
+    once, here, so a BOM wins over any ``<meta charset>`` in the page.
     """
     blob = bytes(blob) if blob is not None else b""
+    text = None
     if detect_bom(blob) is not None:
-        blob = decode_bytes(blob)[0].encode("utf-8")
+        text = decode_bytes(blob)[0]
+        blob = text.encode("utf-8")
     if blob.startswith(b"%PDF-"):
         return "pdf", blob
     if blob[:4] == b"\x89PNG":
@@ -330,13 +341,17 @@ def page_route(blob) -> tuple[str, object]:
         return "docx", blob
     if blob.startswith(PAYLOAD_MAGIC):
         return "payload", blob
-    if looks_like_html(blob):
-        return "html", blob
-    if mostly_text(blob):
+    is_html = looks_like_html(blob)
+    if not (is_html or mostly_text(blob)):
+        return "binary", blob
+    if text is None:
         text = decode_bytes(blob)[0]
-        lang = sniff_code_lang(text)
-        return ("code", (text, lang)) if lang else ("md", text)
-    return "binary", blob
+    if is_html:
+        page = HtmlPage(blob)
+        page.text = text
+        return "html", page
+    lang = sniff_code_lang(text)
+    return ("code", (text, lang)) if lang else ("md", text)
 
 
 def _extract_binary_doc(blob: bytes):

@@ -2,16 +2,19 @@
 
 NOTE: no ``from __future__ import annotations`` here — pandas_udf resolves
 the pd.Series type hints at decoration time; stringified annotations break
-signature inference.
+signature inference. Return types are DataType objects, not DDL strings:
+a DDL string is parsed when the decorator runs, which needs an active
+SparkSession, so the module would not import without one.
 """
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, IntegerType, StringType
 
 from ..kernels.textproc import edit_distance
 
 
-@pandas_udf("double")
+@pandas_udf(DoubleType())
 def lev_norm_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Weighted-Levenshtein kernel (metrics.py:85-159) over Arrow batches;
     with default costs it equals levenshtein(a,b)/len(b) (the oracle)."""
@@ -20,7 +23,7 @@ def lev_norm_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf("int")
+@pandas_udf(IntegerType())
 def compress_milli_udf(texts: pd.Series) -> pd.Series:
     """zlib level-6 compression ratio in integer milli units:
     ``1000 * len(zlib(utf8)) // len(utf8)``; NULL/empty text -> NULL.
@@ -37,7 +40,7 @@ def compress_milli_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(pd.array(out, dtype="Int32"))
 
 
-@pandas_udf("string")
+@pandas_udf(StringType())
 def normalize_numbers_udf(text: pd.Series) -> pd.Series:
     """Number/ordinal/money/time verbalization (numbers.py kernel, the F5
     cleaner analog) over Arrow batches."""

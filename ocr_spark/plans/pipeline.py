@@ -213,7 +213,7 @@ def run_extract_job(
         # read it back from the committed files so a mid-write crash can never
         # mark unwritten urls as done. Gated urls join it from the persisted
         # split: processed work that must never be re-extracted.
-        committed = spark.read.parquet(f"{out_tbl.data_dir}/commit={commit_id}")
+        committed = out_tbl.read_commit(spark, commit_id)
         new_lineage = lineage_of(committed, commit_id)
         if gated is not None and n_gated:
             new_lineage = new_lineage.unionByName(lineage_of(gated, commit_id))
@@ -228,16 +228,9 @@ def run_extract_job(
     metrics = {k: int(v or 0) for k, v in obs.get.items()}
     metrics["gated"] = n_gated
     row = {"commit_id": commit_id, **metrics}
-    metrics_tbl = ManifestTable(f"{out_root}/metrics")
-    # a pandas frame goes through Arrow into a one-partition local relation:
-    # one task, one file (a Python list is spread over every slot)
-    metrics_tbl.append(
-        spark.createDataFrame(
-            pd.DataFrame([row]),
-            "commit_id long, docs long, spans long, chars long, gated long",
-        ),
-        commit_id,
-    )
+    # one row built on the driver: the catalog writes it with pyarrow, as
+    # one file and without a Spark job
+    ManifestTable(f"{out_root}/metrics").append(pd.DataFrame([row]), commit_id)
 
     return commit_id, metrics
 

@@ -4,8 +4,17 @@ The sandbox runtime has no Iceberg catalog jar (SURVEY.md §7 risk 5), so the
 writer sits behind this one interface. Every commit goes through ONE writer,
 ``ManifestTable._commit``: it overwrites ``data/commit=<id>/`` with the
 commit's parquet files, then saves ``manifest.json`` last with one entry
-``{commit_id, path, ts, op, ...}`` (any earlier entry of the same id is
-replaced, so a retried commit never lists its files twice).
+``{commit_id, path, ts, op, schema, ...}`` (any earlier entry of the same id
+is replaced, so a retried commit never lists its files twice). A Spark
+DataFrame is written by Spark; a pandas frame built on the driver (a job's
+one-row metrics) is written by pyarrow as one file, with no Spark job.
+
+``schema`` is the written frame's Spark schema (``StructType.jsonValue()``).
+Reads merge the stored schemas of the entries they open, by column name in
+first-seen order, and raise on a type conflict as parquet ``mergeSchema``
+does. With the schema known, opening a table reads no file footer, so it
+runs no Spark job. An entry with no ``schema`` (written before the key existed) makes its
+read fall back to ``mergeSchema`` over the footers, as every read did then.
 
 ``op`` names what the commit did:
 
@@ -31,6 +40,41 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
+
+
+def _merge_types(a, b):
+    """Parquet ``mergeSchema``'s rule: structs merge by field name, new
+    fields appended in first-seen order; arrays and maps merge their
+    element types; any other pair must be equal."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        fields = {f.name: f for f in a.fields}
+        for f in b.fields:
+            old = fields.get(f.name)
+            fields[f.name] = f if old is None else StructField(
+                f.name,
+                _merge_types(old.dataType, f.dataType),
+                old.nullable or f.nullable,
+                old.metadata,
+            )
+        return StructType(list(fields.values()))
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(
+            _merge_types(a.elementType, b.elementType), a.containsNull or b.containsNull
+        )
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _merge_types(a.keyType, b.keyType),
+            _merge_types(a.valueType, b.valueType),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    if a != b:
+        raise ValueError(
+            f"cannot merge schemas: {a.simpleString()} vs {b.simpleString()}"
+        )
+    return a
 
 
 class ManifestTable:
@@ -87,13 +131,36 @@ class ManifestTable:
         the data write is an overwrite and so is the entry, so a retry of
         the same id never lists the path twice (read() would duplicate
         every row of the commit). ``entry`` holds the op's extra manifest
-        keys."""
+        keys. A pandas frame is written on the driver by pyarrow, as one
+        file (unpartitioned)."""
+        import pandas as pd
+
         path = os.path.join(self.data_dir, f"commit={commit_id}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        record = {"commit_id": commit_id, "path": path, "ts": time.time(), "op": op}
+        if isinstance(df, pd.DataFrame):
+            import shutil
+
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            table = pa.Table.from_pandas(df, preserve_index=False)
+            schema = from_arrow_schema(table.schema)
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+        else:
+            schema = df.schema
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
+        record = {
+            "commit_id": commit_id,
+            "path": path,
+            "ts": time.time(),
+            "op": op,
+            "schema": schema.jsonValue(),
+        }
         if partition_by:
             record["partitioned"] = list(partition_by)
         record.update(entry)
@@ -120,27 +187,35 @@ class ManifestTable:
 
     @staticmethod
     def _read_entries(spark, entries):
-        """Merged read over manifest entries, safe for hive-partitioned
-        commits: multi-root partition discovery rejects sibling commit
-        dirs as "conflicting structures", so when any entry is
-        partitioned each commit reads under its own basePath and the
-        union runs allowMissingColumns — additive schema evolution and
-        partitioned/plain mixes both surface missing columns as NULL,
-        matching the single-root mergeSchema behavior."""
-        paths = [s["path"] for s in entries]
-        if len(paths) > 1 and any(s.get("partitioned") for s in entries):
-            from functools import reduce
+        """Merged read over manifest entries with their stored schemas
+        merged (no footer job); any legacy entry without one makes the
+        read infer the schema with ``mergeSchema`` instead. Safe for
+        hive-partitioned commits: multi-root partition discovery rejects
+        sibling commit dirs as "conflicting structures", so when any
+        entry is partitioned each commit reads under its own basePath and
+        the union runs allowMissingColumns — additive schema evolution and
+        partitioned/plain mixes both surface missing columns as NULL."""
+        from pyspark.sql.types import StructType
 
-            dfs = [
-                spark.read.option("mergeSchema", "true")
-                .option("basePath", p)
-                .parquet(p)
-                for p in paths
-            ]
+        paths = [s["path"] for s in entries]
+        if all("schema" in s for s in entries):
+            merged = reduce(
+                _merge_types, (StructType.fromJson(s["schema"]) for s in entries)
+            )
+            reader = spark.read.schema(merged)
+        else:
+            reader = spark.read.option("mergeSchema", "true")
+        if len(paths) > 1 and any(s.get("partitioned") for s in entries):
+            dfs = [reader.option("basePath", p).parquet(p) for p in paths]
             return reduce(
                 lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
             )
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return reader.parquet(*paths)
+
+    def read_commit(self, spark, commit_id: int):
+        """The rows of one commit, opened through its manifest entry."""
+        entry = next(s for s in self._load_manifest() if s["commit_id"] == commit_id)
+        return self._read_entries(spark, [entry])
 
     def read_pruned(self, spark, col: str, lo, hi, *, as_of: int | None = None):
         """Zone-map scan (Iceberg manifest pruning): read only the commits
@@ -197,8 +272,8 @@ class ManifestTable:
         a crawl pipeline gains fields — lang tags, quality scores —
         mid-table); rows from pre-evolution commits surface the new
         columns as NULL. Type CHANGES of an existing column are not
-        supported (mergeSchema raises), matching the scope of additive
-        evolution."""
+        supported (the read raises, as mergeSchema does), matching the
+        scope of additive evolution."""
         vis = self._visible(self._load_manifest(), as_of)
         if not vis:
             return None
@@ -233,8 +308,6 @@ class ManifestTable:
         are read one by one and unioned by name, so hive-partitioned and
         schema-evolved commits mix (a column missing from a commit reads
         as NULL)."""
-        from functools import reduce
-
         from pyspark.sql import functions as F
 
         vis = self._visible(self._load_manifest())
@@ -243,7 +316,7 @@ class ManifestTable:
         tagged = reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             (
-                spark.read.parquet(s["path"]).withColumn("_cid", F.lit(s["commit_id"]))
+                self._read_entries(spark, [s]).withColumn("_cid", F.lit(s["commit_id"]))
                 for s in vis
             ),
         )

@@ -36,7 +36,10 @@ def pending_pages(pages: DataFrame, lineage: DataFrame | None) -> DataFrame:
     Join strategy is left to Catalyst/AQE: after a partial failure the
     lineage side is small relative to the scan and broadcasts; on a full
     re-run it can be large and AQE falls back to a shuffled join — both are
-    correct, and the common resume case never shuffles the pages scan."""
+    correct, and the common resume case never shuffles the pages scan.
+    The lineage urls are not deduplicated first: an anti-join's result does
+    not depend on duplicate keys on its right side, and a ``distinct``
+    would shuffle every lineage url."""
     if lineage is None:
         return pages
-    return pages.join(lineage.select("url").distinct(), "url", "left_anti")
+    return pages.join(lineage.select("url"), "url", "left_anti")

@@ -7,8 +7,12 @@ For every seed it runs ``perfbench/run.py --trace 0`` once in each checkout
 alternating which side goes first so that host drift does not land on one
 side. It prints one row per pair, then q1/median/q3 of each side and the
 number of pairs the change won (ties count for neither) for every
-end-to-end metric in ``BENCHMARK.json``. Exits non-zero if any run fails or
-is not ``correct``.
+end-to-end metric in ``BENCHMARK.json``. Each metric also gets a verdict
+under the claim rule: a gain is ``resolved`` when the change wins at least
+9 of every 10 pairs and its median beats the base median by more than the
+base's interquartile range (``gap`` and ``iqr``, in the metric's unit, a
+positive gap being better). Exits non-zero if any run fails or is not
+``correct``.
 """
 
 from __future__ import annotations
@@ -47,6 +51,16 @@ def _quartiles(xs: list[float]) -> list[float]:
     return statistics.quantiles(xs, n=4, method="inclusive")
 
 
+def _verdict(base: list[float], change: list[float], better: str):
+    """(wins, gap, iqr, resolved) of one metric under the claim rule."""
+    sign = 1 if better == "higher" else -1
+    wins = sum(sign * (c - b) > 0 for b, c in zip(base, change))
+    gap = sign * (statistics.median(change) - statistics.median(base))
+    q1, _, q3 = _quartiles(base)
+    iqr = q3 - q1
+    return wins, gap, iqr, 10 * wins >= 9 * len(base) and gap > iqr
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("base_dir")
@@ -78,13 +92,19 @@ def main():
         print(f"{seed:<5} {order[0]:<7} " + "  ".join(cells) + note, flush=True)
 
     n = len(values["base"][metrics[0][0]])
-    print(f"\n{args.workload}: {n} pairs, base q1/median/q3 -> change q1/median/q3, change wins")
+    print(
+        f"\n{args.workload}: {n} pairs, base q1/median/q3 -> change q1/median/q3, "
+        "median gap vs base IQR, verdict, change wins"
+    )
     for name, better in metrics:
         base, change = values["base"][name], values["change"][name]
-        sign = 1 if better == "higher" else -1
-        wins = sum(sign * (c - b) > 0 for b, c in zip(base, change))
+        wins, gap, iqr, resolved = _verdict(base, change, better)
         qb, qc = ("/".join(f"{q:.4g}" for q in _quartiles(v)) for v in (base, change))
-        print(f"{name:>16}  {qb:>24} -> {qc:<24}  {wins}/{n}")
+        verdict = "resolved" if resolved else "unresolved"
+        print(
+            f"{name:>16}  {qb:>24} -> {qc:<24}  gap {gap:+.4g} iqr {iqr:.4g}  "
+            f"{verdict:<10}  {wins}/{n}"
+        )
     if not all_correct:
         sys.exit("some runs were not correct")
 

@@ -246,6 +246,61 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert set(inc.columns) == {"id", "v", "lang"}
 
 
+def test_read_with_stored_schemas_runs_no_job(spark, tmp_path):
+    """Every entry stores its frame's schema, so a read over two commits,
+    with an added column, scans no file footer: zero Spark jobs."""
+    tbl = ManifestTable(str(tmp_path / "sch"))
+    tbl.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    tbl.append(spark.createDataFrame([(2, "b", "en")], "id long, v string, lang string"))
+    assert all("schema" in s for s in tbl.snapshots)
+    sc = spark.sparkContext
+    group = "catalog-read"
+    sc.setJobGroup(group, "ManifestTable.read over two commits")
+    try:
+        df = tbl.read(spark)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == 0
+    assert df.columns == ["id", "v", "lang"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a", None), (2, "b", "en")]
+
+
+def test_legacy_entry_without_schema_still_reads(spark, tmp_path):
+    """An entry written before entries stored their schema reads from its
+    footers, alone and merged with entries that store one."""
+    tbl = ManifestTable(str(tmp_path / "legacy"))
+    tbl.append(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
+    manifest = tbl.snapshots
+    del manifest[0]["schema"]
+    tbl._save_manifest(manifest)
+
+    alone = tbl.read(spark)
+    assert sorted(alone.columns) == ["id", "v"]
+    assert sorted(map(tuple, alone.collect())) == [(1, "a"), (2, "b")]
+
+    tbl.append(spark.createDataFrame([(3, "c", "en")], "id long, v string, lang string"))
+    assert "schema" not in tbl.snapshots[0] and "schema" in tbl.snapshots[1]
+    merged = tbl.read(spark)
+    assert set(merged.columns) == {"id", "v", "lang"}
+    assert {r.id: r.lang for r in merged.collect()} == {1: None, 2: None, 3: "en"}
+    assert sorted(r.id for r in tbl.read_commit(spark, 0).collect()) == [1, 2]
+
+
+@pytest.mark.parametrize("old,new", [("bigint", "string"), ("int", "bigint")])
+def test_type_conflict_across_commits_raises_on_read(spark, tmp_path, old, new):
+    """A column whose type differs between commits cannot be merged, as
+    parquet mergeSchema refuses it."""
+    tbl = ManifestTable(str(tmp_path / "conflict"))
+    tbl.append(spark.createDataFrame([(1, 1)], f"id long, v {old}"))
+    v = "2" if new == "string" else 2
+    tbl.append(spark.createDataFrame([(2, v)], f"id long, v {new}"))
+    with pytest.raises(Exception, match="(?i)merg"):
+        tbl.read(spark)
+    # each commit alone still reads with its own type
+    assert tbl.read(spark, as_of=0).schema["v"].dataType.simpleString() == old
+
+
 def test_zone_map_pruning(spark, tmp_path):
     """Commit-level min/max zone maps: a ranged read opens ONLY the
     overlapping commits; commits without stats are read conservatively;

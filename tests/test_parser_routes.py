@@ -217,3 +217,41 @@ def test_css_select_follows_the_page_router(spark):
     df = spark.createDataFrame(rows, "url string, html binary")
     got = css_select_table(df, ["p"]).collect()
     assert [(r.url, r.tag, r.text) for r in got] == [("zip", "p", "chapter one text")]
+
+
+_META_1252_PAGE = (
+    '<html><head><meta charset="windows-1252"><title>Café</title></head>'
+    "<body><p>Crème brûlée à la carte</p></body></html>"
+)
+_BOM_PAGES = {
+    "utf16_le_bom": b"\xff\xfe" + _META_1252_PAGE.encode("utf-16-le"),
+    "utf8_bom": b"\xef\xbb\xbf" + _META_1252_PAGE.encode("utf-8"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BOM_PAGES))
+def test_bom_wins_over_meta_charset(name):
+    """A BOM page is decoded once, by the router: the kernel must not decode
+    its UTF-8 re-encoding again under the page's <meta charset>."""
+    import pandas as pd
+
+    from ocr_spark.operators.extract import extract_batch
+
+    out = extract_batch(
+        pd.DataFrame(
+            {"url": ["u"], "warc_ts": [None], "lang": ["fr"], "html": [_BOM_PAGES[name]]}
+        )
+    )
+    assert out["title"].tolist() == ["Café"]
+    assert out["text"].tolist()[0] == "Crème brûlée à la carte"
+
+
+def test_css_select_reads_the_routers_decode(spark):
+    from ocr_spark.operators.dom_query import css_select_table
+
+    df = spark.createDataFrame(sorted(_BOM_PAGES.items()), "url string, html binary")
+    got = css_select_table(df, ["p"]).collect()
+    assert sorted((r.url, r.text) for r in got) == [
+        ("utf16_le_bom", "Crème brûlée à la carte"),
+        ("utf8_bom", "Crème brûlée à la carte"),
+    ]

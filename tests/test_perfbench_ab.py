@@ -1,6 +1,6 @@
 """scripts/perfbench_ab.py: seed parsing, interleaved pair order, win
-counting by each metric's direction, and the non-zero exit on an
-incorrect run. ``_run`` is replaced, so no checkout is benchmarked."""
+counting by each metric's direction, the claim-rule verdict, and the
+non-zero exit on an incorrect run. ``_run`` is replaced, so no checkout is benchmarked."""
 
 import importlib.util
 import json
@@ -92,3 +92,45 @@ def test_incorrect_run_exits_non_zero(tmp_path, monkeypatch):
     with pytest.raises(SystemExit) as exc:
         _main(monkeypatch, base, change, "1-3", fake_run)
     assert exc.value.code not in (0, None)
+
+
+def _verdicts(capsys):
+    summary = capsys.readouterr().out.split("\n\n", 1)[1].splitlines()
+    return {line.split()[0]: line.split()[-2] for line in summary[1:] if line.strip()}
+
+
+def test_verdict_resolves_a_gain_won_in_9_of_10_pairs_beyond_the_base_iqr(
+    tmp_path, monkeypatch, capsys
+):
+    base, change = _checkout(tmp_path, "base"), _checkout(tmp_path, "change")
+    # base docs/s 100..109 (IQR 4.5); the change is 20 faster in 9 pairs and
+    # 1 slower in one: median gap ~+20 > 4.5. cpu ms/doc ties everywhere.
+    def fake_run(root, workload, seed, seconds):
+        b = 100.0 + seed
+        if root == base:
+            return _result(b, 10.0)
+        return _result(b - 1 if seed == 3 else b + 20, 10.0)
+
+    _main(monkeypatch, base, change, "0-9", fake_run)
+    assert _verdicts(capsys) == {"docs_per_s": "resolved", "cpu_ms_per_doc": "unresolved"}
+    wins, gap, iqr, resolved = ab._verdict([100.0 + s for s in range(10)],
+                                            [120.0 + s for s in range(10)], "higher")
+    assert (wins, gap, iqr, resolved) == (10, 20.0, 4.5, True)
+
+
+def test_verdict_unresolved_when_the_gap_is_inside_the_base_iqr_or_wins_fall_short(
+    tmp_path, monkeypatch, capsys
+):
+    base, change = _checkout(tmp_path, "base"), _checkout(tmp_path, "change")
+    # docs/s: the change wins all 10 pairs, but by 2 against a base IQR of
+    # 45; cpu ms/doc (lower is better): 5 lower by far, 8 of 10 pairs only
+    def fake_run(root, workload, seed, seconds):
+        b = 100.0 + 10 * seed
+        if root == base:
+            return _result(b, 10.0)
+        return _result(b + 2, 10.0 if seed < 2 else 5.0)
+
+    _main(monkeypatch, base, change, "0-9", fake_run)
+    assert _verdicts(capsys) == {"docs_per_s": "unresolved", "cpu_ms_per_doc": "unresolved"}
+    assert ab._verdict([10.0] * 10, [10.0] * 2 + [5.0] * 8, "lower") == (8, 5.0, 0.0, False)
+    assert ab._verdict([10.0] * 10, [10.0] + [5.0] * 9, "lower") == (9, 5.0, 0.0, True)

@@ -151,6 +151,34 @@ def test_extract_plan_runs_no_spark_job(spark):
     assert control > after
 
 
+
+def test_resumed_commit_runs_five_spark_jobs(spark, golden, tmp_path):
+    """One resumed commit, with the caller's page scan inside it: the page
+    schema read, three jobs for the extraction write (the lineage
+    broadcast, the url-hash spread and the write) and the lineage write.
+    The lineage read and read-back use the manifest's stored schemas, the
+    anti-join takes the lineage urls as they are and the metrics row is
+    written on the driver, so none of those runs a job."""
+    path = str(tmp_path / "pages")
+    golden.drop("expected_text").write.parquet(path)
+    out_root = str(tmp_path / "wh")
+    run_extract_job(
+        spark, spark.read.parquet(path).where("url like '%/p/1%'"), out_root,
+        salt_partitions=4,
+    )
+    sc = spark.sparkContext
+    group = "resumed-commit"
+    sc.setJobGroup(group, "one resumed run_extract_job commit")
+    try:
+        _, m = run_extract_job(
+            spark, spark.read.parquet(path), out_root, salt_partitions=4
+        )
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < m["docs"] < 500
+    assert jobs <= 5
+
 def test_plan_has_no_shuffle_without_salting(spark, golden, tmp_path):
     # production shape: pages come from storage (a scan, not the synthesis
     # python stage) -> the extraction plan must be exchange-free
