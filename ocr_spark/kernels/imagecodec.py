@@ -6,12 +6,14 @@ external libraries:
 - PNG: full encode/decode for 8-bit gray/RGB/RGBA/palette, zlib (stdlib)
   inflate + per-row unfilter (None/Sub/Up/Average/Paeth with proper
   bytes-per-pixel offsets). Lossless round trip.
-- JPEG: baseline sequential (SOF0) DECODER — DQT/DHT/SOF0/SOS/DRI markers,
-  canonical Huffman, dequantize + zigzag + 8x8 IDCT (orthonormal DCT-II
-  basis), chroma upsampling (4:4:4 / 4:2:2 / 4:2:0), YCbCr->RGB — and a
-  4:4:4 ENCODER (standard Annex K quantization + Huffman tables, quality
-  scaling) used to build test fixtures; progressive (SOF2) is rejected
-  with a clear error.
+- JPEG: one DECODER for sequential (SOF0/1) and progressive (SOF2)
+  frames — DQT/DHT/SOF/SOS/DRI markers, interleaved and single-component
+  scans, canonical Huffman, spectral selection + successive
+  approximation, dequantize + zigzag + 8x8 IDCT (orthonormal DCT-II
+  basis), chroma upsampling (4:4:4 / 4:2:2 / 4:2:0), YCbCr->RGB — and
+  baseline (4:4:4 / 4:2:0) and progressive ENCODERS (standard Annex K
+  quantization + Huffman tables, quality scaling) used to build test
+  fixtures.
 - resize_bilinear / resize_pad_image: the reference's resize semantics —
   preserve_aspect_ratio scales by min(out/in) with int truncation, then
   pads after/before/even with pad_value
@@ -23,6 +25,7 @@ external libraries:
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
 
@@ -198,7 +201,7 @@ def jpeg_dimensions(blob: bytes) -> tuple[int, int]:
 
 
 # ===========================================================================
-# JPEG (baseline)
+# JPEG (baseline and progressive)
 # ===========================================================================
 
 _ZIGZAG = np.array([
@@ -297,20 +300,16 @@ def _build_huffman_encode(bits, values):
     return {sym: (length, code) for (length, code), sym in dec.items()}
 
 
-def _extend(v: int, n: int) -> int:
-    return v - ((1 << n) - 1) if n and v < (1 << (n - 1)) else v
-
-
 _PEEK_CACHE: dict = {}
 
 
 def _build_peek_table(bits, values) -> list[int]:
     """Canonical Huffman -> 65536-entry table: entry = (code_len << 8) | sym
     for every 16-bit window starting with that code; 0 marks invalid.
-    Returned (and cached) as a python LIST: every decode loop indexes it
-    per symbol, where numpy scalar indexing boxes each access — and the
-    progressive path snapshots tables per scan, so converting at use
-    sites repeated the 65536-entry copy per scan."""
+    Returned (and cached) as a python LIST: the scan decoder indexes it
+    per symbol, where numpy scalar indexing boxes each access — and every
+    scan snapshots its tables, so converting at use sites repeated the
+    65536-entry copy per scan."""
     key = (tuple(bits), tuple(values))
     cached = _PEEK_CACHE.get(key)
     if cached is not None:
@@ -331,30 +330,15 @@ def _build_peek_table(bits, values) -> list[int]:
     return out
 
 
-def _destuff_segments(scan: bytes) -> list[bytes]:
-    """Entropy bytes split at RST markers, 0xFF00 unstuffed, stop at any
-    other marker."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    i, n = 0, len(scan)
-    while i < n:
-        b = scan[i]
-        if b == 0xFF:
-            nxt = scan[i + 1] if i + 1 < n else 0xD9
-            if nxt == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                segs.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            break  # EOI / next marker
-        cur.append(b)
-        i += 1
-    segs.append(bytes(cur))
-    return segs
+_RST_MARKER = re.compile(b"\xff[\xd0-\xd7]")
+
+
+def _destuff_segments(data: bytes) -> list[bytes]:
+    """One scan's entropy bytes (already cut at its end marker by
+    _entropy_end) -> one segment per restart interval, 0xFF00 unstuffed.
+    Every other 0xFF in the slice is stuffing or fill, so the split cannot
+    match inside a stuffed pair."""
+    return [s.replace(b"\xff\x00", b"\xff") for s in _RST_MARKER.split(data)]
 
 
 def _seg_windows(seg: bytes) -> tuple[list[int], int]:
@@ -378,7 +362,7 @@ def _seg_windows(seg: bytes) -> tuple[list[int], int]:
 def _entropy_end(blob: bytes, start: int) -> int:
     """First byte offset at/after `start` holding a REAL marker (not byte
     stuffing 0xFF00, not RST0-7, not 0xFF fill) — the end of one scan's
-    entropy-coded data in a multi-scan (progressive) stream."""
+    entropy-coded data."""
     i, n = start, len(blob)
     while True:
         j = blob.find(b"\xff", i)
@@ -395,24 +379,29 @@ def _entropy_end(blob: bytes, start: int) -> int:
 
 def jpeg_decode(blob: bytes) -> np.ndarray:
     """Baseline (SOF0/1) or progressive (SOF2) JPEG bytes -> (H, W, 3)
-    or (H, W) uint8."""
+    or (H, W) uint8.
+
+    One marker walk records every scan up to EOI (DHT/DRI may change
+    between scans, so each scan snapshots its tables); one scan decoder
+    fills per-component zigzag coefficient rows; one dequantize +
+    batched IDCT per component turns them into planes."""
     if blob[:2] != b"\xff\xd8":
         raise CodecError("not a JPEG")
     pos = 2
     qt = {}
     huff_dc, huff_ac = {}, {}
     comps = None
+    progressive = False
     h_img = w_img = 0
     restart_interval = 0
-    scan = None
-    scan_comps = None
-    progressive = False
-    prog_scans: list[dict] = []
+    scans: list[dict] = []
     while pos + 4 <= len(blob):
         if blob[pos] != 0xFF:
             pos += 1
             continue
         marker = blob[pos + 1]
+        if marker == 0xD9:  # EOI
+            break
         if marker == 0xD8 or (0xD0 <= marker <= 0xD7):
             pos += 2
             continue
@@ -422,29 +411,19 @@ def jpeg_decode(blob: bytes) -> np.ndarray:
             p = 0
             while p < len(payload):
                 pq, tq = payload[p] >> 4, payload[p] & 0xF
-                p += 1
-                if pq == 0:
-                    tbl = np.frombuffer(payload[p : p + 64], dtype=np.uint8).astype(np.int32)
-                    p += 64
-                else:
-                    tbl = np.frombuffer(payload[p : p + 128], dtype=">u2").astype(np.int32)
-                    p += 128
-                if tbl.size != 64:
+                size = 128 if pq else 64
+                raw = payload[p + 1 : p + 1 + size]
+                if len(raw) != size:
                     raise CodecError("truncated DQT")
-                qt[tq] = tbl
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
+                qt[tq] = np.frombuffer(raw, dtype=">u2" if pq else np.uint8).astype(np.int32)
+                p += 1 + size
+        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
+            if len(payload) < 6 or len(payload) < 6 + 3 * payload[5]:
+                raise CodecError("truncated SOF")
+            progressive = marker == 0xC2
             h_img, w_img = struct.unpack(">HH", payload[1:5])
-            n_comp = payload[5]
             comps = []
-            for i in range(n_comp):
-                cid, samp, tq = payload[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": samp >> 4, "v": samp & 0xF, "tq": tq})
-        elif marker == 0xC2:  # SOF2 progressive
-            progressive = True
-            h_img, w_img = struct.unpack(">HH", payload[1:5])
-            n_comp = payload[5]
-            comps = []
-            for i in range(n_comp):
+            for i in range(payload[5]):
                 cid, samp, tq = payload[6 + 3 * i : 9 + 3 * i]
                 comps.append({"id": cid, "h": samp >> 4, "v": samp & 0xF, "tq": tq})
         elif marker == 0xC4:  # DHT
@@ -460,176 +439,89 @@ def jpeg_decode(blob: bytes) -> np.ndarray:
                 (huff_dc if tc == 0 else huff_ac)[th] = table
                 p += 17 + n
         elif marker == 0xDD:  # DRI
+            if len(payload) < 2:
+                raise CodecError("truncated DRI")
             (restart_interval,) = struct.unpack(">H", payload[:2])
         elif marker == 0xDA:  # SOS
             n_sc = payload[0] if payload else 0
-            if len(payload) < 4 + 2 * n_sc:
-                raise CodecError("truncated SOS header")
-            scan_comps = []
-            for i in range(n_sc):
-                cid, tabs = payload[1 + 2 * i : 3 + 2 * i]
-                scan_comps.append({"id": cid, "dc": tabs >> 4, "ac": tabs & 0xF})
-            if not progressive:
-                scan = blob[pos + 2 + seg_len :]
-                break
-            # progressive: collect this scan's params + entropy slice and
-            # keep walking (DHT/DRI may be redefined between scans, so the
-            # table refs are snapshotted per scan here)
-            ss, se = payload[1 + 2 * n_sc], payload[2 + 2 * n_sc]
-            ahal = payload[3 + 2 * n_sc]
+            if not 1 <= n_sc <= 4 or len(payload) < 4 + 2 * n_sc:
+                raise CodecError("bad SOS header")
+            specs = payload[1 : 1 + 2 * n_sc]  # (component id, Td << 4 | Ta) pairs
+            ss, se, ahal = payload[1 + 2 * n_sc : 4 + 2 * n_sc]
             start = pos + 2 + seg_len
             end = _entropy_end(blob, start)
-            prog_scans.append(
+            scans.append(
                 {
-                    "comps": scan_comps,
+                    "comps": [
+                        (cid, huff_dc.get(tabs >> 4), huff_ac.get(tabs & 0xF))
+                        for cid, tabs in zip(specs[::2], specs[1::2])
+                    ],
                     "ss": ss,
                     "se": se,
                     "ah": ahal >> 4,
                     "al": ahal & 0xF,
                     "dri": restart_interval,
-                    "dc": {sc["dc"]: huff_dc.get(sc["dc"]) for sc in scan_comps},
-                    "ac": {sc["ac"]: huff_ac.get(sc["ac"]) for sc in scan_comps},
                     "data": blob[start:end],
                 }
             )
             pos = end
             continue
         pos += 2 + seg_len
-    if comps is None or (scan is None and not prog_scans):
+    if comps is None or not scans:
         raise CodecError("missing SOF/SOS")
     # sanity cap: a corrupt header claiming huge dimensions must not turn
     # into a multi-GB allocation + a 56M-iteration python loop (one bad
     # blob would stall the whole Spark task far beyond any except-guard)
     if h_img * w_img > 64_000_000 or h_img == 0 or w_img == 0:
         raise CodecError(f"implausible dimensions {w_img}x{h_img}")
-
+    # the tail assembles one plane (gray) or the first three (YCbCr)
+    if not comps or len(comps) == 2:
+        raise CodecError(f"unsupported component count {len(comps)}")
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
+    if len({c["id"] for c in comps}) < len(comps) or any(
+        not (1 <= c["h"] <= 4 and 1 <= c["v"] <= 4) or hmax % c["h"] or vmax % c["v"]
+        for c in comps
+    ):
+        raise CodecError("unsupported component ids or sampling factors")
     mcux = -(-w_img // (8 * hmax))
     mcuy = -(-h_img // (8 * vmax))
-    if progressive:
-        planes = _decode_progressive_scans(
-            prog_scans, comps, qt, h_img, w_img, hmax, vmax, mcux, mcuy
+    for c in comps:
+        # interleaved scans cover the MCU grid (gh x gw blocks); a
+        # single-component scan covers only the component's own extent
+        # (bh x bw blocks, A.2.2)
+        c["gh"], c["gw"] = mcuy * c["v"], mcux * c["h"]
+        c["bh"] = -(-h_img * c["v"] // (8 * vmax))
+        c["bw"] = -(-w_img * c["h"] // (8 * hmax))
+    # every block of every component is coded at least once by a DC code
+    # of one bit or more: a header declaring more blocks than the scans
+    # hold bits is rejected before the coefficient rows are allocated
+    n_blocks = sum(c["bh"] * c["bw"] for c in comps)
+    n_bits = 8 * sum(len(s["data"]) for s in scans)
+    if n_blocks > n_bits:
+        raise CodecError(
+            f"{w_img}x{h_img} frame declares {n_blocks} blocks but its scans hold {n_bits} bits"
         )
-        return _assemble_planes(planes, comps, h_img, w_img, hmax, vmax)
-    planes = {
-        c["id"]: np.zeros((mcuy * 8 * c["v"], mcux * 8 * c["h"]), dtype=np.float64)
-        for c in comps
-    }
-    by_id = {c["id"]: c for c in comps}
-    for sc in scan_comps:
-        sc.update(by_id[sc["id"]])
+    coef = _decode_scans(scans, comps, mcuy, mcux, progressive)
 
-    segments = _destuff_segments(scan)
-    # peek tables are already python LISTS (built so in _build_peek_table:
-    # numpy scalar indexing boxes per symbol and was measurably slower)
-    dc_lists = huff_dc
-    ac_lists = huff_ac
-    seg_idx = 0
-    u32, limit = _seg_windows(segments[0])
-    bp = 0
-    dc_pred = {c["id"]: 0 for c in comps}
-    mcu_count = 0
-    # entropy-decode into plain python coefficient rows first; the
-    # dequantize + un-zigzag + IDCT then runs as ONE batched einsum per
-    # component (the per-block numpy round trips dominated otherwise).
-    # The bit reader is inlined with local ints — no object, no method
-    # calls — because this loop runs once per Huffman SYMBOL.
-    pending: dict = {c["id"]: {"coefs": [], "pos": []} for c in comps}
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                seg_idx += 1
-                u32, limit = _seg_windows(
-                    segments[seg_idx] if seg_idx < len(segments) else b""
-                )
-                bp = 0
-                dc_pred = {c["id"]: 0 for c in comps}
-            for sc in scan_comps:
-                dcl = dc_lists[sc["dc"]]
-                acl = ac_lists[sc["ac"]]
-                cid = sc["id"]
-                for by in range(sc["v"]):
-                    for bx in range(sc["h"]):
-                        coefs = [0] * 64
-                        p = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                        e = dcl[p]
-                        if e == 0:
-                            raise CodecError("bad Huffman code")
-                        length = e >> 8
-                        n = e & 0xFF  # DC symbol IS the extra-bit count
-                        if n == 0:
-                            bp += length
-                        elif length + n <= 16:
-                            raw = (p >> (16 - length - n)) & ((1 << n) - 1)
-                            bp += length + n
-                            dc_pred[cid] += _extend(raw, n)
-                        else:
-                            bp += length
-                            raw = (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> (
-                                16 - n
-                            )
-                            bp += n
-                            dc_pred[cid] += _extend(raw, n)
-                        coefs[0] = dc_pred[cid]
-                        k = 1
-                        while k < 64:
-                            p = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                            e = acl[p]
-                            if e == 0:
-                                raise CodecError("bad Huffman code")
-                            length = e >> 8
-                            rs = e & 0xFF
-                            if rs == 0x00:  # EOB
-                                bp += length
-                                break
-                            if rs == 0xF0:  # ZRL
-                                bp += length
-                                k += 16
-                                continue
-                            n = rs & 0xF
-                            if length + n <= 16:
-                                raw = (p >> (16 - length - n)) & ((1 << n) - 1)
-                                bp += length + n
-                            else:
-                                bp += length
-                                raw = (
-                                    u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                ) >> (16 - n)
-                                bp += n
-                            k += rs >> 4
-                            if k > 63:
-                                break
-                            coefs[k] = _extend(raw, n)
-                            k += 1
-                        if bp > limit:
-                            raise CodecError("truncated entropy data")
-                        pending[cid]["coefs"].append(coefs)
-                        pending[cid]["pos"].append(
-                            ((my * sc["v"] + by) * 8, (mx * sc["h"] + bx) * 8)
-                        )
-            mcu_count += 1
-
-    for sc in scan_comps:
-        rows = pending[sc["id"]]
-        if not rows["coefs"]:
-            continue
-        zz = np.asarray(rows["coefs"], dtype=np.float64) * qt[sc["tq"]][None, :]
-        blocks = np.zeros((len(zz), 64))
+    planes = {}
+    for c in comps:
+        if c["tq"] not in qt:
+            raise CodecError("missing quantization table")
+        gh, gw = c["gh"], c["gw"]
+        zz = np.asarray(coef[c["id"]], dtype=np.float64) * qt[c["tq"]]
+        blocks = np.empty_like(zz)
         blocks[:, _ZIGZAG] = zz
-        spatial = (
-            np.einsum("ij,njk,kl->nil", _A.T, blocks.reshape(-1, 8, 8), _A) + 128.0
+        spatial = _A.T @ blocks.reshape(-1, 8, 8) @ _A + 128.0
+        planes[c["id"]] = (
+            spatial.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
         )
-        plane = planes[sc["id"]]
-        for b, (y0, x0) in enumerate(rows["pos"]):
-            plane[y0 : y0 + 8, x0 : x0 + 8] = spatial[b]
-
     return _assemble_planes(planes, comps, h_img, w_img, hmax, vmax)
 
 
 def _assemble_planes(planes, comps, h_img, w_img, hmax, vmax) -> np.ndarray:
-    """Shared decode tail: chroma upsample, crop to image dims, YCbCr ->
-    RGB (ITU-R BT.601, the JFIF matrix)."""
+    """Decode tail: chroma upsample, crop to image dims, YCbCr -> RGB
+    (ITU-R BT.601, the JFIF matrix)."""
     out_planes = []
     for c in comps:
         p = planes[c["id"]]
@@ -646,260 +538,208 @@ def _assemble_planes(planes, comps, h_img, w_img, hmax, vmax) -> np.ndarray:
     return np.clip(rgb.round(), 0, 255).astype(np.uint8)
 
 
-def _decode_progressive_scans(
-    scans, comps, qt, h_img, w_img, hmax, vmax, mcux, mcuy
-) -> dict:
-    """SOF2 scan sequence -> float planes. Coefficients accumulate across
-    scans in zigzag int arrays per component (spectral-selection bands
-    fill k-ranges; successive approximation fills bit Al upward: first
-    pass stores value << Al, refinement passes OR/add 1 << Al per
-    G.1.2.3 / libjpeg decode_mcu_AC_refine); one batched IDCT per
-    component at the end, same einsum as the baseline path.
+def _decode_scans(scans, comps, mcuy, mcux, progressive) -> dict:
+    """Every scan of the frame -> {component id: gh*gw zigzag coefficient
+    rows}, blocks in raster order.
 
-    The bit reader is inlined with local ints exactly like the baseline
-    entropy loop (u32 16-bit peek windows, bp bit cursor) — half the
-    corpus JPEGs are progressive, and per-symbol method calls on a
-    reader object dominated the decode."""
+    A sequential scan is a DC-first pass and then an AC-first pass over
+    band 1..63 at Al=0, block by block. Progressive scans fill spectral
+    bands (DC or one AC band) and bits: first passes store value << Al,
+    refinements add 1 << Al (G.1.2). Interleaved scans walk MCUs;
+    single-component scans walk the component's own block grid.
+
+    The per-block helpers keep the bit reader inlined with local ints
+    (u32 16-bit peek windows, bp bit cursor): per-symbol method calls on
+    a reader object dominated the decode."""
     by_id = {c["id"]: c for c in comps}
-    gdims = {c["id"]: (mcuy * c["v"], mcux * c["h"]) for c in comps}
-    # python nested lists: the per-coefficient scatter below is pure int
-    # work and numpy scalar writes box every access
-    coef = {
-        cid: [[0] * 64 for _ in range(gh * gw)] for cid, (gh, gw) in gdims.items()
-    }
-    # non-interleaved (single-component) scan dims per B.2.3
-    ndims = {}
-    for c in comps:
-        cw = -(-w_img * c["h"] // hmax)
-        ch = -(-h_img * c["v"] // vmax)
-        ndims[c["id"]] = (-(-ch // 8), -(-cw // 8))
-
+    # python nested lists: the per-coefficient writes are pure int work,
+    # and numpy scalar writes box every access
+    coef = {c["id"]: [[0] * 64 for _ in range(c["gh"] * c["gw"])] for c in comps}
     for scan in scans:
-        if any(sc["id"] not in by_id for sc in scan["comps"]):
+        if any(cid not in by_id for cid, _, _ in scan["comps"]):
             raise CodecError("scan references unknown component")
-        sc_comps = [dict(sc, **by_id[sc["id"]]) for sc in scan["comps"]]
-        ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
+        if progressive:
+            ss, se, ah, al = scan["ss"], scan["se"], scan["ah"], scan["al"]
+            if ss == 0 and se != 0:
+                raise CodecError("bad progressive DC scan band")
+            if ss > se or se > 63:
+                raise CodecError("bad progressive AC scan band")
+            if ss and len(scan["comps"]) != 1:
+                raise CodecError("interleaved progressive AC scan")
+        else:
+            ss, se, ah, al = 0, 63, 0, 0
+        for _, dcl, acl in scan["comps"]:
+            if ss == 0 and ah == 0 and dcl is None:
+                raise CodecError("missing DC table")
+            if se and acl is None:
+                raise CodecError("missing AC table")
+        dcls = [dcl for _, dcl, _ in scan["comps"]]
+        acls = [acl for _, _, acl in scan["comps"]]
+        if len(scan["comps"]) == 1:
+            c = by_id[scan["comps"][0][0]]
+            rows, gw = coef[c["id"]], c["gw"]
+            units = [[(0, rows[by * gw + bx])] for by in range(c["bh"]) for bx in range(c["bw"])]
+        else:
+            mcu = []  # (scan component, block row, block col) within one MCU
+            for i, (cid, _, _) in enumerate(scan["comps"]):
+                c = by_id[cid]
+                mcu += [(i, c, by, bx) for by in range(c["v"]) for bx in range(c["h"])]
+            units = [
+                [
+                    (i, coef[c["id"]][(my * c["v"] + by) * c["gw"] + mx * c["h"] + bx])
+                    for i, c, by, bx in mcu
+                ]
+                for my in range(mcuy)
+                for mx in range(mcux)
+            ]
+
         dri = scan["dri"]
         segments = _destuff_segments(scan["data"])
         seg_idx = 0
         u32, limit = _seg_windows(segments[0])
-        bp = 0
-        eobrun = 0
-        dc_pred = {sc["id"]: 0 for sc in sc_comps}
-
-        if ss == 0:  # DC scan (interleaved when >1 comp)
-            if se != 0:
-                raise CodecError("bad progressive DC scan band")
-            dc_lists = {}
-            if ah == 0:
-                for sc in sc_comps:
-                    tbl = scan["dc"][sc["dc"]]
-                    if tbl is None:
-                        raise CodecError("missing DC table")
-                    dc_lists[sc["dc"]] = tbl
-            interleaved = len(sc_comps) > 1
-            if interleaved:
-                units = [(my, mx) for my in range(mcuy) for mx in range(mcux)]
-            else:
-                sc0 = sc_comps[0]
-                bh, bw = ndims[sc0["id"]]
-                units = [(by, bx) for by in range(bh) for bx in range(bw)]
-            for n_unit, (uy, ux) in enumerate(units):
-                if dri and n_unit and n_unit % dri == 0:
-                    seg_idx += 1
-                    u32, limit = _seg_windows(
-                        segments[seg_idx] if seg_idx < len(segments) else b""
-                    )
-                    bp = 0
-                    eobrun = 0
-                    dc_pred = {sc["id"]: 0 for sc in sc_comps}
-                for sc in sc_comps:
-                    cid = sc["id"]
-                    gh, gw = gdims[cid]
-                    if interleaved:
-                        blocks = [
-                            (uy * sc["v"] + by, ux * sc["h"] + bx)
-                            for by in range(sc["v"])
-                            for bx in range(sc["h"])
-                        ]
-                    else:
-                        blocks = [(uy, ux)]
+        bp = eobrun = 0
+        preds = [0] * len(dcls)
+        k0 = ss or 1
+        for n_unit, unit in enumerate(units):
+            if dri and n_unit and n_unit % dri == 0:
+                seg_idx += 1
+                u32, limit = _seg_windows(
+                    segments[seg_idx] if seg_idx < len(segments) else b""
+                )
+                bp = eobrun = 0
+                preds = [0] * len(dcls)
+            for i, row in unit:
+                if ss == 0:
                     if ah == 0:
-                        dcl = dc_lists[sc["dc"]]
-                    for by, bx in blocks:
-                        row = coef[cid][by * gw + bx]
-                        if ah == 0:  # DC first
-                            p16 = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                            e = dcl[p16]
-                            if e == 0:
-                                raise CodecError("bad Huffman code")
-                            length = e >> 8
-                            n = e & 0xFF
-                            if n == 0:
-                                bp += length
-                            elif length + n <= 16:
-                                raw = (p16 >> (16 - length - n)) & ((1 << n) - 1)
-                                bp += length + n
-                                dc_pred[cid] += _extend(raw, n)
-                            else:
-                                bp += length
-                                raw = (
-                                    u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                ) >> (16 - n)
-                                bp += n
-                                dc_pred[cid] += _extend(raw, n)
-                            row[0] = dc_pred[cid] << al
-                        else:  # DC refinement: one raw bit
-                            if (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> 15:
-                                row[0] |= 1 << al
-                            bp += 1
-                        if bp > limit:
-                            raise CodecError("truncated entropy data")
-        else:  # AC scan: exactly one component (B.2.3)
-            if len(sc_comps) != 1:
-                raise CodecError("interleaved progressive AC scan")
-            sc = sc_comps[0]
-            cid = sc["id"]
-            gh, gw = gdims[cid]
-            bh, bw = ndims[cid]
-            tbl = scan["ac"][sc["ac"]]
-            if tbl is None:
-                raise CodecError("missing AC table")
-            acl = tbl
-            p1 = 1 << al
-            m1 = -1 << al
-            n_unit = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if dri and n_unit and n_unit % dri == 0:
-                        seg_idx += 1
-                        u32, limit = _seg_windows(
-                            segments[seg_idx] if seg_idx < len(segments) else b""
-                        )
-                        bp = 0
-                        eobrun = 0
-                    n_unit += 1
-                    row = coef[cid][by * gw + bx]
-                    if ah == 0:  # AC first pass (G.1.2.2)
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            p16 = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                            e = acl[p16]
-                            if e == 0:
-                                raise CodecError("bad Huffman code")
-                            length = e >> 8
-                            rs = e & 0xFF
-                            s = rs & 15
-                            if s:
-                                k += rs >> 4
-                                if length + s <= 16:
-                                    raw = (p16 >> (16 - length - s)) & ((1 << s) - 1)
-                                    bp += length + s
-                                else:
-                                    bp += length
-                                    raw = (
-                                        u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                    ) >> (16 - s)
-                                    bp += s
-                                if k > se:  # corrupt run; bits consumed
-                                    break
-                                row[k] = _extend(raw, s) << al
-                                k += 1
-                            elif rs == 0xF0:  # ZRL
-                                bp += length
-                                k += 16
-                            else:
-                                bp += length
-                                r = rs >> 4
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += (
-                                        u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                    ) >> (16 - r)
-                                    bp += r
-                                break
-                        if bp > limit:
-                            raise CodecError("truncated entropy data")
-                    else:  # AC refinement (G.1.2.3 / decode_mcu_AC_refine)
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                p16 = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
-                                e = acl[p16]
-                                if e == 0:
-                                    raise CodecError("bad Huffman code")
-                                bp += e >> 8
-                                rs = e & 0xFF
-                                r, s = rs >> 4, rs & 15
-                                val = 0
-                                if s:
-                                    val = (
-                                        p1
-                                        if (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF)
-                                        >> 15
-                                        else m1
-                                    )
-                                    bp += 1
-                                elif r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += (
-                                            u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                        ) >> (16 - r)
-                                        bp += r
-                                    break
-                                while k <= se:
-                                    c = row[k]
-                                    if c:
-                                        b = (
-                                            u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                        ) >> 15
-                                        bp += 1
-                                        if b and not (c & p1):
-                                            row[k] = c + (p1 if c > 0 else m1)
-                                    else:
-                                        if r == 0:
-                                            break
-                                        r -= 1
-                                    k += 1
-                                if val and k <= se:
-                                    row[k] = val
-                                k += 1
-                        if eobrun:
-                            while k <= se:
-                                c = row[k]
-                                if c:
-                                    b = (
-                                        u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF
-                                    ) >> 15
-                                    bp += 1
-                                    if b and not (c & p1):
-                                        row[k] = c + (p1 if c > 0 else m1)
-                                k += 1
-                            eobrun -= 1
-                        if bp > limit:
-                            raise CodecError("truncated entropy data")
+                        bp, diff = _dc_first(u32, bp, dcls[i])
+                        preds[i] += diff
+                        row[0] = preds[i] << al
+                    else:  # DC refinement: one raw bit
+                        if (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> 15:
+                            row[0] |= 1 << al
+                        bp += 1
+                if se:
+                    if ah:
+                        bp, eobrun = _ac_refine(u32, bp, acls[i], row, k0, se, al, eobrun)
+                    elif eobrun:
+                        eobrun -= 1
+                    else:
+                        bp, eobrun = _ac_first(u32, bp, acls[i], row, k0, se, al)
+                if bp > limit:
+                    raise CodecError("truncated entropy data")
+    return coef
 
-    # dequantize + un-zigzag + batched IDCT per component (baseline tail)
-    planes = {}
-    for c in comps:
-        cid = c["id"]
-        if c["tq"] not in qt:
-            raise CodecError("missing quantization table")
-        gh, gw = gdims[cid]
-        zz = np.asarray(coef[cid], dtype=np.float64) * qt[c["tq"]][None, :]
-        blocks = np.zeros((gh * gw, 64))
-        blocks[:, _ZIGZAG] = zz
-        spatial = (
-            np.einsum("ij,njk,kl->nil", _A.T, blocks.reshape(-1, 8, 8), _A) + 128.0
-        )
-        planes[cid] = (
-            spatial.reshape(gh, gw, 8, 8).transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8)
-        )
-    return planes
+
+def _dc_first(u32, bp, dcl) -> tuple[int, int]:
+    """One DC difference (F.2.2.1): a Huffman category, then that many
+    raw bits. Returns (bit cursor, difference)."""
+    p = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
+    e = dcl[p]
+    if e == 0:
+        raise CodecError("bad Huffman code")
+    length = e >> 8
+    n = e & 0xFF  # DC symbol IS the extra-bit count
+    if n == 0:
+        return bp + length, 0
+    if length + n <= 16:
+        raw = (p >> (16 - length - n)) & ((1 << n) - 1)
+    else:
+        if n > 16:
+            raise CodecError("bad DC magnitude")
+        bp += length
+        length = 0
+        raw = (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> (16 - n)
+    return bp + length + n, raw if raw >> (n - 1) else raw - (1 << n) + 1
+
+
+def _ac_first(u32, bp, acl, row, k, se, al) -> tuple[int, int]:
+    """Band k..se of one block, first pass (G.1.2.2). Returns (bit
+    cursor, blocks left in the EOB run this block started)."""
+    while k <= se:
+        p = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
+        e = acl[p]
+        if e == 0:
+            raise CodecError("bad Huffman code")
+        length = e >> 8
+        rs = e & 0xFF
+        s = rs & 15
+        if s:
+            k += rs >> 4
+            if length + s <= 16:
+                raw = (p >> (16 - length - s)) & ((1 << s) - 1)
+                bp += length + s
+            else:
+                bp += length
+                raw = (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> (16 - s)
+                bp += s
+            if k > se:  # corrupt run; bits consumed
+                break
+            row[k] = (raw if raw >> (s - 1) else raw - (1 << s) + 1) << al
+            k += 1
+        elif rs == 0xF0:  # ZRL
+            bp += length
+            k += 16
+        else:  # EOBn
+            bp += length
+            r = rs >> 4
+            eobrun = (1 << r) - 1
+            if r:
+                eobrun += (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> (16 - r)
+                bp += r
+            return bp, eobrun
+    return bp, 0
+
+
+def _ac_refine(u32, bp, acl, row, k, se, al, eobrun) -> tuple[int, int]:
+    """Band k..se of one block, refinement pass (G.1.2.3 / libjpeg
+    decode_mcu_AC_refine). Returns (bit cursor, EOB run left)."""
+    p1 = 1 << al
+    m1 = -1 << al
+    if eobrun == 0:
+        while k <= se:
+            p = (u32[bp >> 3] >> (16 - (bp & 7))) & 0xFFFF
+            e = acl[p]
+            if e == 0:
+                raise CodecError("bad Huffman code")
+            bp += e >> 8
+            rs = e & 0xFF
+            r, s = rs >> 4, rs & 15
+            val = 0
+            if s:
+                val = p1 if (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> 15 else m1
+                bp += 1
+            elif r != 15:
+                eobrun = 1 << r
+                if r:
+                    eobrun += (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> (16 - r)
+                    bp += r
+                break
+            while k <= se:
+                c = row[k]
+                if c:
+                    b = (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> 15
+                    bp += 1
+                    if b and not (c & p1):
+                        row[k] = c + (p1 if c > 0 else m1)
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val and k <= se:
+                row[k] = val
+            k += 1
+    if eobrun:
+        while k <= se:
+            c = row[k]
+            if c:
+                b = (u32[bp >> 3] >> (16 - (bp & 7)) & 0xFFFF) >> 15
+                bp += 1
+                if b and not (c & p1):
+                    row[k] = c + (p1 if c > 0 else m1)
+            k += 1
+        eobrun -= 1
+    return bp, eobrun
 
 
 class _BitWriter:

@@ -440,6 +440,146 @@ def test_jpeg_444_bytes_unchanged_by_refactor():
         ic.jpeg_encode(img, subsampling="422")
 
 
+# -- one decode path: every scan, size bound, error class, pinned pixels ----
+
+def test_baseline_non_interleaved_scans():
+    """A sequential frame may code one component per scan (T.81 A.2.2).
+    Every scan must be decoded, not just the first: the three-scan file
+    decodes to exactly the pixels of the interleaved one."""
+    import struct
+
+    img = _grad(24, 32)
+    quality = 85
+    ref = ic.jpeg_encode(img, quality=quality)
+    # DQT / SOF0 / DHT exactly as jpeg_encode writes them
+    out = bytearray(ref[: ref.find(b"\xff\xda")])
+    rgb = img.astype(np.float64)
+    r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+    planes = [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+    ]
+    quant = [
+        ic._quality_scale(ic._QT_LUMA, quality)[ic._ZIGZAG],
+        ic._quality_scale(ic._QT_CHROMA, quality)[ic._ZIGZAG],
+    ]
+    dc_tables = [ic._build_huffman_encode(*ic._DC_LUMA), ic._build_huffman_encode(*ic._DC_CHROMA)]
+    ac_tables = [ic._build_huffman_encode(*ic._AC_LUMA), ic._build_huffman_encode(*ic._AC_CHROMA)]
+    for ci, plane in enumerate(planes):
+        t = 0 if ci == 0 else 1
+        sos = bytes([1, ci + 1, (t << 4) | t, 0, 63, 0])
+        out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
+        wtr = ic._BitWriter()
+        pred = 0
+        for by in range(0, 24, 8):
+            for bx in range(0, 32, 8):
+                block = plane[by : by + 8, bx : bx + 8] - 128.0
+                pred = ic._encode_block(wtr, block, quant[t], dc_tables[t], ac_tables[t], pred)
+        wtr.flush()
+        out += wtr.out
+    out += b"\xff\xd9"
+    assert np.array_equal(ic.jpeg_decode(bytes(out)), ic.jpeg_decode(ref))
+
+
+_FRAMES = {"sof0": (ic.jpeg_encode, b"\xff\xc0"), "sof2": (ic.jpeg_encode_progressive, b"\xff\xc2")}
+
+
+@pytest.mark.parametrize("frame", sorted(_FRAMES))
+def test_jpeg_declared_blocks_beyond_scan_bits_rejected(frame):
+    """A few hundred bytes whose SOF declares 7999x7999 (under the pixel
+    cap) are rejected before any coefficient row is allocated: every 8x8
+    block costs at least one bit of a DC code."""
+    import struct
+
+    encode, sof = _FRAMES[frame]
+    blob = bytearray(encode(_grad(16, 16, c=1), quality=80))
+    i = blob.find(sof)
+    blob[i + 5 : i + 9] = struct.pack(">HH", 7999, 7999)
+    with pytest.raises(ic.CodecError, match="declares 1000000 blocks but its scans hold"):
+        ic.jpeg_decode(bytes(blob))
+
+
+@pytest.mark.parametrize("frame", sorted(_FRAMES))
+@pytest.mark.parametrize("case", ["undefined_dc_table", "undefined_quant_table", "odd_16bit_dqt"])
+def test_jpeg_malformed_header_raises_codec_error(frame, case):
+    """Header and scan errors are CodecError, one class for the caller to
+    record, never a KeyError or a numpy ValueError."""
+    import struct
+
+    encode, sof = _FRAMES[frame]
+    blob = bytearray(encode(_grad(16, 16, c=1), quality=80))
+    if case == "undefined_dc_table":  # first scan's component uses DC table 1
+        i = blob.find(b"\xff\xda")
+        blob[i + 6] = 0x10 | (blob[i + 6] & 0xF)
+    elif case == "undefined_quant_table":  # the component names table 3
+        i = blob.find(sof)
+        blob[i + 12] = 3
+    else:  # 16-bit precision table of 127 bytes
+        i = blob.find(b"\xff\xdb")
+        (seg_len,) = struct.unpack(">H", blob[i + 2 : i + 4])
+        dqt = bytes([0x10]) + bytes(range(1, 128))
+        blob[i : i + 2 + seg_len] = b"\xff\xdb" + struct.pack(">H", len(dqt) + 2) + dqt
+    with pytest.raises(ic.CodecError):
+        ic.jpeg_decode(bytes(blob))
+
+
+def test_jpeg_header_fuzz_raises_only_codec_error():
+    """Mutated marker segments (tables, frame and scan headers) of
+    baseline, 4:2:0 and progressive files either decode or raise
+    CodecError: no KeyError, struct.error, ZeroDivisionError or numpy
+    ValueError escapes."""
+    rng = np.random.RandomState(7)
+    bases = [
+        ic.jpeg_encode(_grad(24, 32), 80),
+        ic.jpeg_encode(_grad(19, 27), 90, subsampling="420"),
+        ic.jpeg_encode(_grad(16, 16, c=1), 80),
+        ic.jpeg_encode_progressive(_grad(24, 32), 80),
+        ic.jpeg_encode_progressive(_grad(16, 16, c=1), 80),
+    ]
+    for i in range(500):
+        base = bases[i % len(bases)]
+        blob = bytearray(base)
+        header_end = base.find(b"\xff\xda") + 14  # through the first SOS header
+        for _ in range(rng.randint(1, 4)):
+            blob[rng.randint(2, header_end)] = rng.randint(0, 256)
+        try:
+            out = ic.jpeg_decode(bytes(blob))
+        except ic.CodecError:
+            continue
+        assert out.dtype == np.uint8
+
+
+def test_jpeg_decode_pixels_pinned():
+    """The decoded pixels of a seeded set of encoder outputs (gray, 4:4:4,
+    4:2:0, odd sizes, qualities 30-98, baseline and progressive) are
+    pinned by digest. The baseline-vs-progressive comparisons above share
+    the dequantize + IDCT tail, so a tail change that moves both alike
+    passes them, but not this."""
+    import hashlib
+
+    rng = np.random.RandomState(1234)
+    digest = hashlib.sha256()
+    for i in range(60):
+        kind = ("gray", "444", "420")[i % 3]
+        h, w = (int(v) for v in rng.randint(1, 65, size=2))
+        quality = int(rng.randint(30, 99))
+        yy, xx = np.mgrid[0:h, 0:w]
+        ramp = yy * 7 + xx * 5
+        shape = (h, w) if kind == "gray" else (h, w, 3)
+        base = ramp if kind == "gray" else ramp[..., None]
+        img = np.clip(base % 256 + rng.randint(-60, 61, size=shape), 0, 255).astype(np.uint8)
+        if kind == "420":
+            blobs = [ic.jpeg_encode(img, quality, subsampling="420")]
+        else:
+            blobs = [ic.jpeg_encode(img, quality), ic.jpeg_encode_progressive(img, quality)]
+        for blob in blobs:
+            out = ic.jpeg_decode(blob)
+            digest.update(str(out.shape).encode())
+            digest.update(out.tobytes())
+    assert digest.hexdigest() == "9705865b312b67493bac42a24b179b521eb7c80e6a15d67a0e2606f114f7e7d3"
+
+
 # -- GIF (round-3 S1 completion: reference image_io.py:68-137 accepts GIF) --
 
 def test_gif_lossless_round_trip():
