@@ -12,8 +12,8 @@ reference repo ``yui-mhcp/ocr`` (see SURVEY.md), re-expressed Spark-first:
 - ``sources``   : deterministic synthetic pages table + parquet-backed
   "iceberg-like" catalog with manifest snapshots + lineage/resume.
 - ``functions`` : native Column-expression helpers (JVM-side, codegen'd).
-- ``plans``     : the flagship extraction pipeline + SparkSession builder.
-- ``streaming`` : Structured Streaming demo operators (stateful dedup).
+- ``plans``     : the flagship extraction pipeline, its streaming form
+  (every stream commits to the catalog) + SparkSession builder.
 """
 
 __version__ = "0.1.0"

@@ -142,10 +142,14 @@ def png_decode(blob: bytes) -> np.ndarray:
         payload = blob[pos + 8 : pos + 8 + length]
         pos += 12 + length
         if tag == b"IHDR":
+            if len(payload) != 13:
+                raise CodecError("truncated IHDR")
             width, height, bit_depth, color_type, _, _, interlace = struct.unpack(
                 ">IIBBBBB", payload
             )
         elif tag == b"PLTE":
+            if len(payload) % 3:
+                raise CodecError("truncated PLTE")
             palette = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
             idat += payload
@@ -160,11 +164,18 @@ def png_decode(blob: bytes) -> np.ndarray:
     planes = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
     if planes is None:
         raise CodecError(f"unsupported color type {color_type}")
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as ex:
+        raise CodecError(f"truncated or corrupt IDAT: {ex}") from ex
+    if len(raw) < height * (1 + width * planes):
+        raise CodecError("truncated IDAT")
     arr = _png_unfilter(raw, width, height, planes)
     if color_type == 3:
         if palette is None:
             raise CodecError("palette image without PLTE")
+        if arr.max(initial=0) >= len(palette):
+            raise CodecError("palette index out of range")
         return palette[arr.reshape(height, width)]
     if planes == 1:
         return arr.reshape(height, width)
@@ -173,7 +184,7 @@ def png_decode(blob: bytes) -> np.ndarray:
 
 def png_dimensions(blob: bytes) -> tuple[int, int]:
     """(height, width) from the fixed-offset IHDR — no decode."""
-    if not blob.startswith(_PNG_SIG) or blob[12:16] != b"IHDR":
+    if not blob.startswith(_PNG_SIG) or blob[12:16] != b"IHDR" or len(blob) < 24:
         raise CodecError("not a PNG")
     w, h = struct.unpack(">II", blob[16:24])
     return h, w
@@ -194,6 +205,8 @@ def jpeg_dimensions(blob: bytes) -> tuple[int, int]:
             continue
         (seg_len,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
         if marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2
+            if pos + 9 > len(blob):
+                raise CodecError("truncated SOF")
             h, w = struct.unpack(">HH", blob[pos + 5 : pos + 9])
             return h, w
         pos += 2 + seg_len

@@ -62,6 +62,7 @@ _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
 _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+_OP_RE = re.compile(rb"[A-Za-z'\"*]+[0-9]*")
 
 
 def _skip_ws(data: bytes, pos: int) -> int:
@@ -684,10 +685,10 @@ def _tokenize_content(data: bytes):
                 yield ("num", float(m.group(0)))
                 pos = m.end()
                 continue
-            m = re.match(rb"[A-Za-z'\"*]+[0-9]*", data[pos:])
+            m = _OP_RE.match(data, pos)
             if m:
                 op = m.group(0).decode("latin-1")
-                pos += m.end()
+                pos = m.end()
                 if op == "BI":  # inline image: skip params + binary blob
                     pos = _skip_inline_image(data, pos)
                     continue

@@ -31,8 +31,9 @@ production accuracy.
 
 Reference analog: the reference keeps an in-memory predicted-cache dict
 and emitted-text set (/root/reference/models/ocr/base_ocr.py:142-144;
-our streaming/stream_ops memories); sketches are the bounded-state form
-those take when the key space no longer fits one process.
+the contract's emission_filter and dedup_exact queries are their
+relational form); sketches are the bounded-state form those take when
+the key space no longer fits one process.
 """
 
 from __future__ import annotations

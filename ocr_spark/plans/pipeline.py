@@ -235,23 +235,12 @@ def run_extract_job(
     return commit_id, metrics
 
 
-def _page_stream(spark, pages_glob: str, max_files_per_trigger: int | None):
-    """Streaming scan of the page files appearing under ``pages_glob``.
-    ``max_files_per_trigger`` is the ingestion-rate knob (the reference's
-    buffer_size, image_io.py:181+)."""
-    from ..sources.pages import PAGES_SCHEMA
-
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(pages_glob)
-
-
 def _start_catalog_stream(pages, tbl: ManifestTable, checkpoint_dir: str, **trigger):
-    """Start the extraction of a page stream into ``tbl``: every non-empty
-    micro-batch becomes catalog commit ``batchId``, so a batch replayed
-    from the WAL after a crash OVERWRITES its own commit instead of
-    duplicating rows."""
+    """Start the extraction of a page stream into ``tbl`` — the one stream
+    sink, fed by page files, WARC drops and httpmirror frames alike: every
+    non-empty micro-batch becomes catalog commit ``batchId``, so a batch
+    replayed from the WAL after a crash OVERWRITES its own commit instead
+    of duplicating rows."""
 
     def commit_batch(batch_df, batch_id: int):
         # pin before inspecting: isEmpty + append on the raw plan would
@@ -274,51 +263,7 @@ def _start_catalog_stream(pages, tbl: ManifestTable, checkpoint_dir: str, **trig
     )
 
 
-def run_streaming_extract(
-    spark,
-    pages_glob: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-):
-    """Continuous-ingestion form of the flagship job (S6/X5 analog): new
-    page files appearing under ``pages_glob`` stream through the SAME
-    single mapInPandas extraction into a parquet sink.
-
-    Exactly-once here comes from Structured Streaming's checkpoint/WAL
-    (file-source offsets + sink commit log) instead of the lineage table —
-    the batch job's anti-join resume and the stream's checkpoint are the
-    two standard shapes of the same idempotence contract.
-    ``max_files_per_trigger`` is the ingestion-rate knob.
-    """
-    pages = _page_stream(spark, pages_glob, max_files_per_trigger)
-    writer = (
-        extract_pages(pages)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        # no timeout: returning with the query still draining would hand the
-        # caller a partially-written sink with no error signal
-        q.awaitTermination()
-    return q
-
-
-def run_streaming_extract_to_catalog(
-    spark,
-    pages_glob: str,
-    table_root: str,
-    checkpoint_dir: str,
-    *,
-    max_files_per_trigger: int | None = None,
-):
+def run_streaming_extract_to_catalog(spark, pages_glob: str, table_root: str, checkpoint_dir: str):
     """Streaming extraction committing each micro-batch into the
     ManifestTable catalog — the Iceberg streaming-sink shape: every
     micro-batch becomes one catalog commit whose id IS the stream's
@@ -330,8 +275,10 @@ def run_streaming_extract_to_catalog(
     same commit ids.
 
     Returns the ManifestTable (drained with availableNow)."""
+    from ..sources.pages import PAGES_SCHEMA
+
     tbl = ManifestTable(table_root)
-    pages = _page_stream(spark, pages_glob, max_files_per_trigger)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_glob)
     _start_catalog_stream(pages, tbl, checkpoint_dir, availableNow=True).awaitTermination()
     return tbl
 

@@ -276,7 +276,7 @@ def write_warc(
     return bytes(out)
 
 
-def stream_warc_pages(spark, warc_dir: str, *, max_files_per_trigger: int | None = None):
+def stream_warc_pages(spark, warc_dir: str):
     """Streaming form of WARC ingestion: new .warc/.warc.gz files appearing
     under ``warc_dir`` become pages rows continuously (the S6 continuous-
     crawl-drop shape). Offsets/exactly-once come from the file-source
@@ -300,26 +300,20 @@ def stream_warc_pages(spark, warc_dir: str, *, max_files_per_trigger: int | None
             StructField("content", BinaryType()),
         ]
     )
-    reader = spark.readStream.format("binaryFile").schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(warc_dir).select("content")
-
-    return files.mapInPandas(_warc_pages_gen, schema=PAGES_SCHEMA)
+    files = spark.readStream.format("binaryFile").schema(schema).load(warc_dir)
+    return files.select("content").mapInPandas(_warc_pages_gen, schema=PAGES_SCHEMA)
 
 
-def run_streaming_warc_extract(spark, warc_dir: str, out_dir: str, checkpoint_dir: str):
-    """WARC drop-directory -> streaming extraction -> parquet sink,
-    exactly-once via the stream checkpoint (availableNow drain)."""
-    from ..operators.extract import extract_pages
+def run_streaming_warc_extract(spark, warc_dir: str, table_root: str, checkpoint_dir: str):
+    """WARC drop-directory -> streaming extraction -> ManifestTable catalog:
+    each micro-batch of new WARC files becomes catalog commit ``batchId``
+    (see ``plans.pipeline.run_streaming_extract_to_catalog``).
 
-    extracted = extract_pages(stream_warc_pages(spark, warc_dir))
-    q = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    Returns the ManifestTable (drained with availableNow)."""
+    from ..plans.pipeline import _start_catalog_stream
+    from .catalog import ManifestTable
+
+    tbl = ManifestTable(table_root)
+    pages = stream_warc_pages(spark, warc_dir)
+    _start_catalog_stream(pages, tbl, checkpoint_dir, availableNow=True).awaitTermination()
+    return tbl

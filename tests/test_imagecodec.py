@@ -237,6 +237,44 @@ def test_png_decoder_never_hangs_on_fuzz():
             pass
 
 
+_PNG_16 = ic.png_encode(_grad(16, 16))
+
+
+def _palette_png(rows: bytes, palette: bytes) -> bytes:
+    """A 2x2 palette PNG with the given (filter-byte-prefixed) rows."""
+    import struct
+    import zlib
+
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + ic._png_chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
+        + ic._png_chunk(b"PLTE", palette)
+        + ic._png_chunk(b"IDAT", zlib.compress(rows))
+        + ic._png_chunk(b"IEND", b"")
+    )
+
+
+@pytest.mark.parametrize(
+    "probe, blob",
+    [
+        ("png_decode", _PNG_16[:20]),  # IHDR cut short
+        ("png_decode", _PNG_16[:30]),  # no IDAT
+        ("png_decode", _PNG_16[:40]),  # IDAT cut short
+        ("png_decode", _palette_png(b"\x00\x00\x01", bytes(6))),  # one row of two
+        ("png_decode", _palette_png(b"\x00\x00\x01\x00\x01\x02", bytes(5))),  # PLTE cut
+        ("png_decode", _palette_png(b"\x00\x00\x01\x00\x01\x02", bytes(6))),  # index 2 of 2
+        ("jpeg_dimensions", b"\xff\xd8\xff\xc0\x00\x11\x08"),  # SOF cut short
+    ],
+    ids=["png_20", "png_30", "png_40", "short_idat", "short_plte", "palette_index", "jpeg_sof_7"],
+)
+def test_malformed_image_raises_codec_error(probe, blob):
+    """A cut-off or inconsistent file raises CodecError, the one class the
+    image route records, not the struct, zlib, index or numpy error of the
+    read that ran short."""
+    with pytest.raises(ic.CodecError):
+        getattr(ic, probe)(blob)
+
+
 def test_jpeg_implausible_dimensions_rejected():
     """A corrupt header claiming 60000x60000 must raise, not allocate GBs
     and spin 56M python iterations (self-review find)."""

@@ -80,36 +80,6 @@ def test_html_sniff_close_tag_breadth():
     assert not looks_like_html(b"i<a.length && j</b")  # '</b' has no '>'
 
 
-def test_dice_blank_frames_not_duplicates():
-    from ocr_spark.streaming.stream_ops import dice_coeff
-
-    z = np.zeros(16)
-    assert dice_coeff(z, z) == 0.0  # divide_no_nan parity: blank != dup
-    a = np.ones(16)
-    assert dice_coeff(a, a) == 1.0
-
-
-def test_repetition_gate_eviction_parity():
-    """A waiting box must survive exactly max_unseen consecutive misses and
-    be evicted on the (max_unseen+1)-th (reference keeps unseen <= max)."""
-    from ocr_spark.streaming.stream_ops import RepetitionGate
-
-    gate = RepetitionGate(n_repeat=3, max_unseen=2)
-    box = [0.1, 0.1, 0.4, 0.2]
-    gate.step([box])              # enters waiting, count=1
-    gate.step([])                 # unseen=1 (<=2: kept)
-    gate.step([])                 # unseen=2 (<=2: kept)
-    assert len(gate.waiting) == 1
-    out = gate.step([box])        # still tracked: count=2
-    assert len(gate.waiting) == 1 and gate.waiting[0][1] == 2 and out == []
-    gate2 = RepetitionGate(n_repeat=3, max_unseen=2)
-    gate2.step([box])
-    gate2.step([])
-    gate2.step([])
-    gate2.step([])                # unseen=3 (>2): evicted
-    assert len(gate2.waiting) == 0
-
-
 def test_ivf_empty_and_tiny_tables(spark):
     from ocr_spark.operators import similarity as sim_ops
 

@@ -395,3 +395,29 @@ def test_q_restores_text_state():
     blocks = parse_pdf_pages(_mini_pdf(objs))[0]["blocks"]
     sizes = {b["text"]: b["font_size"] for b in blocks}
     assert sizes == {"ten": 10, "twentyfour": 24, "stillten": 10}
+
+
+def test_content_tokenizer_time_is_linear():
+    """Tokenizing a content stream of many short operators takes time
+    linear in its length: matching an operator must not copy the rest of
+    the stream. 4x the bytes may cost at most 6x the CPU (a copy per
+    operator measured ~8-10x)."""
+    import time
+
+    from ocr_spark.kernels.pdf_parse import _tokenize_content
+
+    unit = b"1 0 0 1 10 10 Tm (ab) Tj\n"
+
+    def cpu_s(n_bytes):
+        data = unit * (n_bytes // len(unit))
+        best = float("inf")
+        for _ in range(2):
+            t0 = time.process_time()
+            for _tok in _tokenize_content(data):
+                pass
+            best = min(best, time.process_time() - t0)
+        return best
+
+    n = 256_000
+    small, large = cpu_s(n), cpu_s(4 * n)
+    assert large / small < 6, f"{n} B: {small:.3f} s, {4 * n} B: {large:.3f} s"

@@ -96,8 +96,8 @@ def test_truncated_warc_tolerated():
 
 def test_streaming_warc_extraction_exactly_once(spark, tmp_path):
     """WARC files dropped into a directory stream through the SAME
-    extraction exactly once; a restart ingests nothing; a NEW file
-    processes alone."""
+    extraction into catalog commits exactly once; a restart adds no
+    commit; a NEW file commits alone."""
     from ocr_spark.sources.warc import run_streaming_warc_extract, write_warc
 
     warc_dir = tmp_path / "drop"
@@ -107,22 +107,27 @@ def test_streaming_warc_extraction_exactly_once(spark, tmp_path):
     (warc_dir / "crawl-0.warc.gz").write_bytes(
         write_warc([(u, t, h) for u, t, h, _ in recs[:half]])
     )
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    table_root, ck = str(tmp_path / "tbl"), str(tmp_path / "ck")
 
-    run_streaming_warc_extract(spark, str(warc_dir), out, ck)
-    got = spark.read.parquet(out)
-    assert got.count() == half
+    tbl = run_streaming_warc_extract(spark, str(warc_dir), table_root, ck)
+    assert tbl.read(spark).count() == half
+    commits1 = [s["commit_id"] for s in tbl.snapshots]
 
     # restart over the same directory: checkpoint replays nothing
-    run_streaming_warc_extract(spark, str(warc_dir), out, ck)
-    assert spark.read.parquet(out).count() == half
+    tbl = run_streaming_warc_extract(spark, str(warc_dir), table_root, ck)
+    assert [s["commit_id"] for s in tbl.snapshots] == commits1
+    assert tbl.read(spark).count() == half
 
-    # a new crawl file lands: only its records process
+    # a new crawl file lands: only its records process, as one new commit
     (warc_dir / "crawl-1.warc.gz").write_bytes(
         write_warc([(u, t, h) for u, t, h, _ in recs[half:]])
     )
-    run_streaming_warc_extract(spark, str(warc_dir), out, ck)
-    final = spark.read.parquet(out)
+    tbl = run_streaming_warc_extract(spark, str(warc_dir), table_root, ck)
+    commits2 = [s["commit_id"] for s in tbl.snapshots]
+    assert len(commits2) == len(commits1) + 1
+    new_rows = tbl.read_changes(spark, since=max(commits1))
+    assert sorted(r.url for r in new_rows.collect()) == sorted(u for u, _, _, _ in recs[half:])
+    final = tbl.read(spark)
     assert final.count() == len(recs)
     texts = {r.url: r.text for r in final.collect()}
     for url, _, _, expected in recs:
