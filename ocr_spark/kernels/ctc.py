@@ -1,4 +1,4 @@
-"""CTC decoding: vectorized greedy best-path + per-sequence beam search.
+"""CTC decoding: vectorized greedy best-path + prefix beam search.
 
 Semantics parity (reference citations, behavior only — new implementation):
 - ctc_decode contract (blank index 0, greedy or beam strategy, scores
@@ -19,9 +19,9 @@ Decode semantics (pinned by our own fixtures, FIXTURES.md §3):
 - beam: standard CTC prefix beam search in log space; score of a prefix is
   log(p_blank + p_nonblank), normalized by length on return.
 
-Greedy is the default hot path (vectorized over the whole Arrow batch);
-beam is a per-sequence loop used only where fixtures demand it
-(SURVEY.md §7 risk 7).
+``decode_batch`` is the extract and recognize stages' one decode, greedy or
+batched beam over a whole Arrow chunk; ``ctc_beam_decode`` is the
+per-sequence reference the batched beam is tested against.
 """
 
 from __future__ import annotations
@@ -313,6 +313,20 @@ def ctc_beam_decode_batch(
         for i in range(n)
     ]
     return tokens, final_scores
+
+
+def decode_batch(jobs: list, vocab: list[str], method: str = "greedy"):
+    """Variable-length (T_i, V) logits -> (texts, scores), decoded as one
+    padded batch: greedy, or "beam" with the reference's flagship width 10
+    (base_ocr.py:113-115), off the default path per SURVEY.md §7 risk 7."""
+    if not jobs:
+        return [], np.zeros((0,))
+    batch, lengths = pad_batch(jobs, len(vocab))
+    if method == "beam":
+        tokens, scores = ctc_beam_decode_batch(batch, lengths, beam_width=10)
+    else:
+        tokens, scores = ctc_greedy_decode_batch(batch, lengths)
+    return [decode_tokens(t, vocab) for t in tokens], scores
 
 
 def sanitize_for_vocab(text: str, vocab_index: dict) -> str:

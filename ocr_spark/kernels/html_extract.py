@@ -184,6 +184,9 @@ def parse_dom(html: str) -> _Node:
 
     root = _Node("[document]")
     stack = [root]
+    # open elements per tag name: an unmatched close tag is dropped in O(1)
+    # instead of a scan of the whole open stack
+    n_open: dict[str, int] = {}
     pos = 0
     n = len(html)
     while pos < n:
@@ -206,10 +209,12 @@ def parse_dom(html: str) -> _Node:
             continue
         name = raw_name.lower()
         if m.group("close"):
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].name == name:
-                    del stack[i:]
-                    break
+            if n_open.get(name):
+                while True:
+                    closed = stack.pop().name
+                    n_open[closed] -= 1
+                    if closed == name:
+                        break
             continue
         blob = m.group("attrs")
         node = _Node(name, parent=stack[-1], attrs_raw=blob)
@@ -243,6 +248,7 @@ def parse_dom(html: str) -> _Node:
                 pos = n
         elif name not in _VOID_TAGS and not self_closing:
             stack.append(node)
+            n_open[name] = n_open.get(name, 0) + 1
     return root
 
 

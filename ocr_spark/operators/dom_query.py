@@ -43,10 +43,10 @@ def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
             out = {"url": [], "selector": [], "match_idx": [], "tag": [], "text": []}
             for url, html in zip(pdf["url"], pdf["html"]):
                 try:
-                    route, page = page_route(html)
+                    route, text = page_route(html)
                     if route != "html":
                         continue
-                    root = parse_dom(page.text)
+                    root = parse_dom(text)
                     for sel, groups in parsed:
                         for k, node in enumerate(css_select(root, groups)):
                             out["url"].append(url)

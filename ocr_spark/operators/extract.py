@@ -4,13 +4,14 @@ Architecture (SURVEY.md §3.1 "Spark lifecycle equivalent"): the whole
 detect -> recognize -> order -> assemble chain for one document is a pure
 function of one input row, so it runs in a SINGLE ``mapInPandas`` stage —
 one Arrow batch in, one batch of extracted documents out, **zero shuffles**.
-Per-document kernels (combine_boxes, CTC decode) are numpy inside the batch;
-CTC decoding is batched across every line of every document in the Arrow
-chunk (the analog of the reference's pad_batch at base_ocr.py:210-211).
 
 Every page goes through one router, :func:`page_route` (the reference's
 ``parse_document`` dispatch, parsers/__init__.py:53-201), which names its
 route: html | pdf | image | docx | payload | code | md | binary.
+``extract_batch`` groups a chunk's rows by route and calls each route's
+kernel once, list in and list out; the payload kernel decodes every line
+of its pages in one padded CTC batch (the analog of the reference's
+pad_batch at base_ocr.py:210-211).
 
 Reference path reproduced (behavior only):
 - HTML pages: prepare_html + extract_paragraphs
@@ -70,10 +71,10 @@ def _get_vocab():
     return _VOCAB, _VOCAB_INDEX
 
 
-def _extract_html_doc(page: HtmlPage):
+def _extract_html_doc(text_in: str):
     from ..kernels.html_extract import render_paragraph
 
-    title, paragraphs, text = extract_page(page.text)
+    title, paragraphs, text = extract_page(text_in)
     spans = _banded_spans(
         [
             (para["type"], " > ".join(para.get("section", [])), render_paragraph(para))
@@ -231,11 +232,13 @@ def _extract_pdf_doc(blob: bytes):
     return title, "\n\n".join(p["text"] for p in kept), spans
 
 
-def _plan_payload_doc(html: bytes):
-    """Parse payload; run detect/order kernels; return per-line decode jobs.
+def _plan_payload_doc(html: bytes, jobs: list):
+    """Parse a payload page and run the detect/order kernels; append one
+    (T, V) logits job per text line to the chunk's ``jobs``.
 
-    Returns (paragraph plan, line_jobs) where line_jobs are (T,V) logits to
-    decode; the final assembly happens after batched CTC decode.
+    Returns the page's paragraphs in reading order, each with its box and
+    the indices of its lines in ``jobs``; they are assembled once the
+    chunk's lines are decoded.
     """
     vocab, index = _get_vocab()
     payload = json.loads(html[len(PAYLOAD_MAGIC) :].decode("utf-8"))
@@ -247,7 +250,7 @@ def _plan_payload_doc(html: bytes):
             word_texts.append(word)
 
     if not word_boxes:
-        return [], []
+        return []
 
     word_boxes = np.asarray(word_boxes, dtype=np.float64)
     para_boxes, para_indices, para_rows = combine_boxes(word_boxes)
@@ -257,7 +260,7 @@ def _plan_payload_doc(html: bytes):
         convert_boxes(para_boxes, "xyxy", "xywh"), method="top"
     )
 
-    paragraphs, jobs = [], []
+    paragraphs = []
     for p in order:
         rows = para_rows[p]
         idx_groups = para_indices[p]
@@ -273,44 +276,32 @@ def _plan_payload_doc(html: bytes):
             members = sorted(members, key=lambda i: word_boxes[i, 0])
             words = " ".join(word_texts[i] for i in members)
             line_text = ctc_kernel.sanitize_for_vocab(words, index)
+            line_job_ids.append(len(jobs))
             jobs.append(ctc_kernel.synth_logits_for_text(line_text, vocab))
-            line_job_ids.append(len(jobs) - 1)
-        paragraphs.append(
-            {"box": para_boxes[int(p)], "line_job_ids": line_job_ids, "rows": rows}
-        )
-    return paragraphs, jobs
+        paragraphs.append({"box": para_boxes[int(p)], "line_job_ids": line_job_ids})
+    return paragraphs
 
 
-def _decode_jobs(all_jobs, method: str = "greedy", num_beams: int = 10):
-    """Batched CTC decode over every line in the Arrow chunk.
-
-    greedy (default) is the vectorized hot path; beam reproduces the
-    reference's flagship callsite (beam_search, num_beams=10 at
-    base_ocr.py:113-115) with a per-sequence prefix beam — same outputs on
-    peaked logits, kept off the default path per SURVEY.md §7 risk 7.
-    """
+def _extract_payload_docs(pages: list, decode_method: str):
+    """The payload route kernel: plan every page, decode all their lines in
+    one batched CTC decode (the reference's pad_batch, base_ocr.py:210-211),
+    then assemble each page. A page that fails mid-plan leaves its appended
+    lines decoded but unread."""
     vocab, _ = _get_vocab()
-    if not all_jobs:
-        return [], np.zeros((0,))
-    batch, lengths = ctc_kernel.pad_batch(all_jobs, len(vocab))
-    if method == "beam":
-        # numpy-batched prefix beam over the whole chunk (VERDICT r01
-        # item 9); exact-equal to the per-sequence reference-shaped decoder
-        tokens, scores = ctc_kernel.ctc_beam_decode_batch(
-            batch, lengths, beam_width=num_beams
-        )
-    else:
-        tokens, scores = ctc_kernel.ctc_greedy_decode_batch(batch, lengths)
-    texts = [ctc_kernel.decode_tokens(t, vocab) for t in tokens]
-    return texts, scores
-
-
-class HtmlPage(bytes):
-    """The html route's payload: the page's bytes (a BOM page's re-encoded
-    as UTF-8), which it compares equal to, and ``text``, the router's one
-    decode of the page, which the HTML kernels read."""
-
-    text: str
+    jobs: list = []
+    plans = [_guard(_plan_payload_doc, page, jobs) for page in pages]
+    line_texts, line_scores = ctc_kernel.decode_batch(jobs, vocab, decode_method)
+    out = []
+    for plan in plans:
+        spans, para_texts = [], []
+        for i, para in enumerate(plan or []):
+            ids = para["line_job_ids"]
+            para_text = " \n".join(line_texts[j] for j in ids)  # base_ocr.py:232
+            para_texts.append(para_text)
+            score = float(np.mean(line_scores[ids])) if ids else 0.0
+            spans.append(_span(i, "ocr", "", para_text, para["box"], score))
+        out.append(("", "\n\n".join(para_texts), spans))
+    return out
 
 
 def page_route(blob) -> tuple[str, object]:
@@ -322,9 +313,9 @@ def page_route(blob) -> tuple[str, object]:
     is decoded and re-encoded as UTF-8 first: the byte sniffers cannot see
     through NUL-interleaved encodings. The payload is what the route's
     kernel reads: the (re-encoded) bytes, except an image's
-    ``(bytes, "png"|"jpeg")``, an :class:`HtmlPage`, a code page's
-    ``(text, lang)`` and a markdown page's text. A text page is decoded
-    once, here, so a BOM wins over any ``<meta charset>`` in the page.
+    ``(bytes, "png"|"jpeg")``, a code page's ``(text, lang)`` and an html
+    or markdown page's text. A text page is decoded once, here, so a BOM
+    wins over any ``<meta charset>`` in the page.
     """
     blob = bytes(blob) if blob is not None else b""
     text = None
@@ -347,89 +338,76 @@ def page_route(blob) -> tuple[str, object]:
     if text is None:
         text = decode_bytes(blob)[0]
     if is_html:
-        page = HtmlPage(blob)
-        page.text = text
-        return "html", page
+        return "html", text
     lang = sniff_code_lang(text)
     return ("code", (text, lang)) if lang else ("md", text)
 
 
-def _extract_binary_doc(blob: bytes):
-    return "", "", []  # binary junk -> empty
+def _guard(fn, *args):
+    """The per-document guard: at 10^12-doc scale one malformed page must
+    degrade to an empty extraction (``None`` here), never fail the task. Its
+    lineage row still commits, so the url is not retried forever."""
+    try:
+        return fn(*args)
+    except Exception:
+        return None
 
 
-# route -> (title, text, spans) kernel; the payload route is planned apart
-# for the chunk-wide CTC decode. Each kernel looks its own kernels up by
-# name when it runs, so a patched module attribute (extract_page,
-# decode_bytes, the lazily imported codecs) is the one that gets called.
+def _per_doc(kernel):
+    """Lift a one-page kernel to a route kernel: a failing page comes out
+    empty and the other pages of its route are unaffected."""
+    return lambda pages, _decode_method: [
+        _guard(kernel, page) or ("", "", []) for page in pages
+    ]
+
+
+# route -> kernel: the route's payloads of one chunk in, one
+# (title, text, spans) per payload out, in order. Each kernel looks its
+# own kernels up by name when it runs, so a patched module attribute
+# (extract_page, decode_bytes, the lazily imported codecs, the
+# kernels.ctc decoders) is the one that gets called.
 _ROUTE_KERNELS = {
-    "html": _extract_html_doc,
-    "pdf": _extract_pdf_doc,
-    "image": _extract_image_doc,
-    "docx": _extract_docx_doc,
-    "code": _extract_code_doc,
-    "md": _extract_md_doc,
-    "binary": _extract_binary_doc,
+    "html": _per_doc(_extract_html_doc),
+    "pdf": _per_doc(_extract_pdf_doc),
+    "image": _per_doc(_extract_image_doc),
+    "docx": _per_doc(_extract_docx_doc),
+    "payload": _extract_payload_docs,
+    "code": _per_doc(_extract_code_doc),
+    "md": _per_doc(_extract_md_doc),
+    "binary": _per_doc(lambda _junk: ("", "", [])),
 }
 
 
 def extract_batch(pdf, decode_method: str = "greedy"):
-    """pandas chunk of pages -> pandas chunk of extracted documents."""
+    """pandas chunk of pages -> pandas chunk of extracted documents: route
+    every page, call each route's kernel once on its pages, and put the
+    results back in row order."""
     import pandas as pd
 
-    # phase 1: plan every doc; collect all payload line-decode jobs
-    plans = []
-    all_jobs: list = []
-    for html in pdf["html"]:
-        # per-document guard: at 10^12-doc scale a single malformed page must
-        # degrade to an empty extraction, never fail the task (the lineage
-        # row still commits, so the url is not retried forever)
-        try:
-            route, payload = page_route(html)
-            if route == "payload":
-                paragraphs, jobs = _plan_payload_doc(payload)
-                base = len(all_jobs)
-                for para in paragraphs:
-                    para["line_job_ids"] = [base + j for j in para["line_job_ids"]]
-                all_jobs.extend(jobs)
-                plans.append((route, paragraphs))
-            else:
-                plans.append((route, _ROUTE_KERNELS[route](payload)))
-        except Exception:
-            plans.append(("binary", ("", "", [])))
+    groups: dict[str, tuple[list, list]] = {}
+    for row, html in enumerate(pdf["html"]):
+        route, payload = _guard(page_route, html) or ("binary", b"")
+        rows, payloads = groups.setdefault(route, ([], []))
+        rows.append(row)
+        payloads.append(payload)
 
-    # phase 2: one batched CTC decode for the whole chunk
-    line_texts, line_scores = _decode_jobs(all_jobs, method=decode_method)
+    results: list = [None] * len(pdf)
+    for route, (rows, payloads) in groups.items():
+        kernel = _ROUTE_KERNELS[route]
+        for row, result in zip(rows, kernel(payloads, decode_method), strict=True):
+            results[row] = result
 
-    # phase 3: assemble
-    out = {
-        "url": pdf["url"].tolist(),
-        "warc_ts": pdf["warc_ts"].tolist(),
-        "lang": pdf["lang"].tolist(),
-        "title": [],
-        "text": [],
-        "spans": [],
-        "n_spans": [],
-    }
-    for route, plan in plans:
-        if route != "payload":
-            title, text, spans = plan
-        else:
-            title, spans, para_texts = "", [], []
-            for i, para in enumerate(plan):
-                texts = [line_texts[j] for j in para["line_job_ids"]]
-                scores = [float(line_scores[j]) for j in para["line_job_ids"]]
-                para_text = " \n".join(texts)  # base_ocr.py:232
-                para_texts.append(para_text)
-                score = float(np.mean(scores)) if scores else 0.0
-                spans.append(_span(i, "ocr", "", para_text, para["box"], score))
-            text = "\n\n".join(para_texts)
-        out["title"].append(title)
-        out["text"].append(text)
-        out["spans"].append(spans)
-        out["n_spans"].append(len(spans))
-
-    return pd.DataFrame(out)
+    return pd.DataFrame(
+        {
+            "url": pdf["url"].tolist(),
+            "warc_ts": pdf["warc_ts"].tolist(),
+            "lang": pdf["lang"].tolist(),
+            "title": [title for title, _, _ in results],
+            "text": [text for _, text, _ in results],
+            "spans": [spans for _, _, spans in results],
+            "n_spans": [len(spans) for _, _, spans in results],
+        }
+    )
 
 
 CHARSET_SCHEMA = "url string, encoding string, source string, n_chars int"

@@ -21,7 +21,7 @@ from ..plans.session import widen
 ROUNDTRIP_SCHEMA = "p_partkey long, decoded string, score double"
 
 
-def ctc_roundtrip(parts: DataFrame, *, beam: bool = False) -> DataFrame:
+def ctc_roundtrip(parts: DataFrame) -> DataFrame:
     """part names -> fixture logits -> batched CTC decode -> text.
 
     One mapInPandas stage; the whole Arrow chunk decodes as a single padded
@@ -38,16 +38,7 @@ def ctc_roundtrip(parts: DataFrame, *, beam: bool = False) -> DataFrame:
                 ctc_kernel.sanitize_for_vocab(str(t), index) for t in pdf["p_name"]
             ]
             jobs = [ctc_kernel.synth_logits_for_text(t, vocab) for t in texts]
-            if beam:
-                decoded, scores = [], []
-                for j in jobs:
-                    (tokens, score), = ctc_kernel.ctc_beam_decode(j, beam_width=10)
-                    decoded.append(ctc_kernel.decode_tokens(tokens, vocab))
-                    scores.append(score)
-            else:
-                batch, lengths = ctc_kernel.pad_batch(jobs, len(vocab))
-                tokens, scores = ctc_kernel.ctc_greedy_decode_batch(batch, lengths)
-                decoded = [ctc_kernel.decode_tokens(t, vocab) for t in tokens]
+            decoded, scores = ctc_kernel.decode_batch(jobs, vocab)
             yield pd.DataFrame(
                 {
                     "p_partkey": pdf["p_partkey"].astype("int64"),

@@ -191,6 +191,58 @@ def test_fast_parser_edge_parity_with_stdlib():
         assert fast == slow, (html, fast, slow)
 
 
+def _adversarial_closes(n_bytes):
+    """n <section> opens, then n close tags that match none of them."""
+    n = n_bytes // 15
+    return "<section>x" * n + "</em>" * n
+
+
+def test_unmatched_close_tags_time_is_linear():
+    """A close tag that matches no open element must not scan the open
+    stack: 4x the bytes may cost at most 6x the CPU (the scan measured
+    ~17x)."""
+    import time
+
+    def cpu_s(n_bytes):
+        page = _adversarial_closes(n_bytes)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.process_time()
+            extract_page(page)
+            best = min(best, time.process_time() - t0)
+        return best
+
+    n = 30_000
+    small, large = cpu_s(n), cpu_s(4 * n)
+    assert large / small < 6, f"{n} B: {small:.3f} s, {4 * n} B: {large:.3f} s"
+
+
+def test_unmatched_close_tags_match_stdlib():
+    import ocr_spark.kernels.html_extract as hx
+
+    def flatten(node):
+        out = []
+        for c in node.children:
+            if isinstance(c, str):
+                out.append(("#text", c))
+            else:
+                out.append((c.name, dict(c.attrs)))
+                out.extend(flatten(c))
+                out.append(("/", c.name))
+        return out
+
+    cases = [
+        _adversarial_closes(6_000),
+        "<p><b>x</i>y</b>z</p>tail</p>after",       # stray close inside a match
+        "<ul><li>a<li>b</ul><li>c</ul></li>",        # closes an outer element
+        "<b><i><b>x</b>y</i>z</b>w</br></img>",      # same name twice; void closes
+        "<script>a</b></script><p>q</script></p>",   # raw-text element never opens
+        "<div/><div>x</div></div>y",                 # self-closed element never opens
+    ]
+    for html in cases:
+        assert flatten(hx.parse_dom(html)) == flatten(hx._stdlib_parse_dom(html)), html
+
+
 def test_unterminated_script_not_leaked():
     import ocr_spark.kernels.html_extract as hx
 

@@ -145,15 +145,16 @@ def _route_cases():
         ("jpeg", jpeg_encode(img), "image", (jpeg_encode(img), "jpeg")),
         ("docx", docx, "docx", docx),
         ("payload", payload, "payload", payload),
-        ("html", html, "html", html),
-        ("utf16_bom_html", b"\xff\xfe" + html.decode().encode("utf-16-le"), "html", html),
+        ("html", html, "html", html.decode()),
+        ("utf16_bom_html", b"\xff\xfe" + html.decode().encode("utf-16-le"), "html", html.decode()),
         ("python", _PY_SRC.encode(), "code", (_PY_SRC, "python")),
         ("java", _JAVA_SRC.encode(), "code", (_JAVA_SRC, "java")),
         ("markdown", _MD_SRC.encode(), "md", _MD_SRC),
         ("binary", junk, "binary", junk),
         ("empty", b"", "binary", b""),
         ("none", None, "binary", b""),
-        ("stored_zip_html", _ZIP_PAGE, "html", _ZIP_PAGE),
+        # no charset and not UTF-8: the cp1252 fallback decode
+        ("stored_zip_html", _ZIP_PAGE, "html", _ZIP_PAGE.decode("cp1252")),
     ]
 
 
