@@ -18,8 +18,15 @@ import re
 import zipfile
 from xml.sax.saxutils import unescape
 
+from .textproc import finditer_closed
+
 _W_P_RE = re.compile(rb"<w:p[ >].*?</w:p>|<w:p/>", re.S)
 _W_T_RE = re.compile(rb"<w:t(?: [^>]*)?>(.*?)</w:t>|<w:tab/>|<w:br/>", re.S)
+# last closer and self-closing alternatives of each (textproc.finditer_closed)
+_W_P_CLOSE_RE = re.compile(rb".*</w:p>", re.S)
+_W_P_EMPTY_RE = re.compile(rb"<w:p/>")
+_W_T_CLOSE_RE = re.compile(rb".*</w:t>", re.S)
+_W_T_EMPTY_RE = re.compile(rb"<w:tab/>|<w:br/>")
 
 _PY_SPLIT_RE = re.compile(r"\n\s*\n(?=def|\#|class|\@)")  # py_parser.py:16
 
@@ -30,9 +37,10 @@ def parse_docx(blob: bytes) -> list[dict]:
     with zipfile.ZipFile(io.BytesIO(blob)) as zf:
         xml = zf.read("word/document.xml")
     paragraphs = []
-    for pm in _W_P_RE.finditer(xml):
+    for pm in finditer_closed(_W_P_RE, _W_P_CLOSE_RE, xml, _W_P_EMPTY_RE):
         parts = []
-        for tm in _W_T_RE.finditer(pm.group(0)):
+        w_p = pm.group(0)
+        for tm in finditer_closed(_W_T_RE, _W_T_CLOSE_RE, w_p, _W_T_EMPTY_RE):
             if tm.group(0) == b"<w:tab/>":
                 parts.append("\t")
             elif tm.group(0) == b"<w:br/>":

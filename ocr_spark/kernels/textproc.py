@@ -32,6 +32,21 @@ URL_RE = re.compile(r"[a-z]+://[\S\n]+")
 PUNCTUATION = "_!?.,’“”‚‘—–()[]{}:;'\"`+-*/^=\\<>&#$%@¿′″·§~"
 
 
+def finditer_closed(pattern, last_closer, data, self_closing=None):
+    """``pattern.finditer(data)`` in linear time, for a markup pattern each
+    of whose matches ends with a closing tag or is a self-closing tag
+    that ``self_closing`` matches. ``last_closer`` (``.*<closer>`` with
+    DOTALL) finds the end of the last closing tag; past it no lazy
+    ``open.*?close`` span can match, so only ``self_closing`` is tried
+    there. Unbounded, each unclosed opener scanned to the end of the
+    data, which made n of them cost O(n^2). The matches are the same."""
+    m = last_closer.match(data)
+    end = m.end() if m else 0
+    yield from pattern.finditer(data, 0, end)
+    if self_closing is not None:
+        yield from self_closing.finditer(data, end)
+
+
 def collapse_whitespace(text: str) -> str:
     return WHITESPACE_RE.sub(" ", text)
 

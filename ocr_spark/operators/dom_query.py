@@ -1,27 +1,66 @@
-"""DOM query operator: CSS ``select()`` over raw crawl page bytes.
+"""The one page reader for operators that query HTML pages, and the CSS
+``select()`` operator built on it.
+
+Every side operator that reads ``pages.html`` as HTML (CSS queries, page
+metadata and its sidecar, anchors, web tables, JSON-LD, microdata) is one
+call to :func:`html_page_stage`. A page is parsed iff the extraction job's
+router (``operators.extract.page_route``) sends it down the html route, so
+the sniff and the charset decode (a BOM wins over ``<meta charset>``) are
+the extractor's own and happen once per page; PDF/image/docx/%OCRPAYLOAD%/
+plain-text pages and pages whose parse raises yield the operator's empty
+rows, never a task failure.
 
 Reference parity: the reference parses HTML with BeautifulSoup
 (/root/reference/utils/text/parsers/html_parser.py:119-159) and its users
 reach for ``soup.select(...)`` for anything beyond the built-in paragraph
-extraction. This operator is that capability as a Spark stage: charset-
-aware decode of ``html:binary`` -> one DOM parse -> N selectors evaluated
-against the same tree -> (url, selector, match_idx, tag, text) rows.
+extraction. ``css_select_table`` is that capability as a Spark stage: one
+DOM parse per page, N selectors evaluated against the same tree ->
+(url, selector, match_idx, tag, text) rows. Selectors are parsed once,
+when the query is built.
 
-Plan shape: ONE narrow Arrow stage (mapInPandas), zero exchanges. Each
-page's DOM is parsed once no matter how many selectors are evaluated;
-selectors are parsed once per executor (closure), not per row. A page is
-queried iff the extraction job's router (``operators.extract.page_route``)
-sends it down the html route; PDF/image/docx/%OCRPAYLOAD%/plain-text pages
-yield no rows.
+Plan shape: ONE narrow Arrow stage (mapInPandas), zero exchanges.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
 SELECT_SCHEMA = "url string, selector string, match_idx int, tag string, text string"
+
+
+def page_rows(parse: Callable, url, html, empty: Iterable[tuple] = ()) -> list[tuple]:
+    """One page -> its ``(url, *row)`` rows: ``parse(url, text)`` returns
+    the rows of an html-route page's decoded text; any other page, or a
+    parse that raises, gives the ``empty`` rows."""
+    from .extract import _guard, page_route
+
+    route, text = _guard(page_route, html) or ("binary", None)
+    rows = _guard(parse, url, text) if route == "html" else None
+    return [(url, *row) for row in (empty if rows is None else rows)]
+
+
+def html_page_stage(
+    pages: DataFrame, schema: str, parse: Callable, empty: Iterable[tuple] = ()
+) -> DataFrame:
+    """pages (url, html) -> ``schema`` rows, :func:`page_rows` per page in
+    one mapInPandas stage. ``schema``'s first column is the url."""
+    columns = [field.split()[0] for field in schema.split(",")]
+    empty = list(empty)
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                row
+                for url, html in zip(pdf["url"], pdf["html"])
+                for row in page_rows(parse, url, html, empty)
+            ]
+            yield pd.DataFrame(rows, columns=columns)
+
+    return pages.select("url", "html").mapInPandas(gen, schema=schema)
 
 
 def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
@@ -29,33 +68,19 @@ def css_select_table(pages: DataFrame, selectors: Iterable[str]) -> DataFrame:
     as rows in document order (``match_idx`` counts per url x selector).
     ``text`` is the element's collapsed subtree text (the same
     ``_extract_text`` semantics the extraction pipeline uses)."""
-    sels = list(selectors)
+    from ..kernels.css_select import parse_selector
 
-    def gen(batches):
-        import pandas as pd
+    parsed = [(s, parse_selector(s)) for s in selectors]
 
-        from ..kernels.css_select import css_select, parse_selector
+    def select(_url, text):
+        from ..kernels.css_select import css_select
         from ..kernels.html_extract import _extract_text, parse_dom
-        from .extract import page_route
 
-        parsed = [(s, parse_selector(s)) for s in sels]
-        for pdf in batches:
-            out = {"url": [], "selector": [], "match_idx": [], "tag": [], "text": []}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    route, text = page_route(html)
-                    if route != "html":
-                        continue
-                    root = parse_dom(text)
-                    for sel, groups in parsed:
-                        for k, node in enumerate(css_select(root, groups)):
-                            out["url"].append(url)
-                            out["selector"].append(sel)
-                            out["match_idx"].append(k)
-                            out["tag"].append(node.name)
-                            out["text"].append(_extract_text(node))
-                except Exception:
-                    continue  # malformed page -> no rows, never a task failure
-            yield pd.DataFrame(out)
+        root = parse_dom(text)
+        return [
+            (sel, k, node.name, _extract_text(node))
+            for sel, groups in parsed
+            for k, node in enumerate(css_select(root, groups))
+        ]
 
-    return pages.select("url", "html").mapInPandas(gen, schema=SELECT_SCHEMA)
+    return html_page_stage(pages, SELECT_SCHEMA, select)

@@ -285,11 +285,17 @@ def _plan_payload_doc(html: bytes, jobs: list):
 def _extract_payload_docs(pages: list, decode_method: str):
     """The payload route kernel: plan every page, decode all their lines in
     one batched CTC decode (the reference's pad_batch, base_ocr.py:210-211),
-    then assemble each page. A page that fails mid-plan leaves its appended
-    lines decoded but unread."""
+    then assemble each page. A page that fails mid-plan takes back the
+    lines it appended, so only planned pages' lines are decoded."""
     vocab, _ = _get_vocab()
     jobs: list = []
-    plans = [_guard(_plan_payload_doc, page, jobs) for page in pages]
+    plans = []
+    for page in pages:
+        n_jobs = len(jobs)
+        plan = _guard(_plan_payload_doc, page, jobs)
+        if plan is None:
+            del jobs[n_jobs:]
+        plans.append(plan)
     line_texts, line_scores = ctc_kernel.decode_batch(jobs, vocab, decode_method)
     out = []
     for plan in plans:

@@ -6,10 +6,13 @@ this operator turns every ``<table>`` in ``html:binary`` into
 ``(url, table_idx, row_idx, col_idx, cell)`` rows so downstream work is
 plain SQL instead of re-parsing page bytes.
 
-Shape: ONE narrow MapInPandas stage (charset-aware decode + regex
-cell scan), zero exchanges — the same execution contract as
-link_graph.extract_page_links. Per-document guard degrades a malformed
-page to zero rows, never a task failure.
+Shape: ONE narrow MapInPandas stage, zero exchanges, through the shared
+page reader (:func:`ocr_spark.operators.dom_query.html_page_stage`, like
+link_graph.extract_page_links): the extraction router sniffs and decodes
+each page (a BOM wins over ``<meta charset>``), then a regex cell scan
+runs over the text. Each table/row/cell scan stops at its last closing
+tag, so unclosed openers cost linear time. A non-HTML or malformed page
+gives zero rows, never a task failure.
 
 The flagship extractor renders tables as text lines (kernels/
 html_extract _parse_table — reference analog utils/text/parsers/
@@ -25,9 +28,15 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..kernels.textproc import finditer_closed
+from .dom_query import html_page_stage
+
 _TABLE_RE = re.compile(r"<table\b[^>]*>(.*?)</table\s*>", re.I | re.S)
 _TR_RE = re.compile(r"<tr\b[^>]*>(.*?)</tr\s*>", re.I | re.S)
 _TD_RE = re.compile(r"<t[dh]\b[^>]*>(.*?)</t[dh]\s*>", re.I | re.S)
+_LAST_TABLE_CLOSE_RE = re.compile(r".*</table\s*>", re.I | re.S)
+_LAST_TR_CLOSE_RE = re.compile(r".*</tr\s*>", re.I | re.S)
+_LAST_TD_CLOSE_RE = re.compile(r".*</t[dh]\s*>", re.I | re.S)
 _TAG_RE = re.compile(r"<[^>]+>")
 _WS_RE = re.compile(r"\s+")
 
@@ -36,21 +45,15 @@ TABLE_CELLS_SCHEMA = (
 )
 
 
-def _html_tables(url: str, blob: bytes) -> list[tuple[int, int, int, str]]:
-    """(table_idx, row_idx, col_idx, cell) cells of one page; [] for
-    non-HTML bytes."""
-    from ..kernels.encoding import decode_bytes, detect_bom
-    from ..kernels.md_extract import looks_like_html
-
-    if detect_bom(blob) is not None:
-        blob = decode_bytes(blob)[0].encode("utf-8")
-    if not looks_like_html(blob):
-        return []
-    text = decode_bytes(blob)[0]
+def _html_tables(_url: str, text: str) -> list[tuple[int, int, int, str]]:
+    """(table_idx, row_idx, col_idx, cell) cells of one page's text."""
     out = []
-    for ti, t in enumerate(_TABLE_RE.finditer(text)):
-        for ri, r in enumerate(_TR_RE.finditer(t.group(1))):
-            for ci, c in enumerate(_TD_RE.finditer(r.group(1))):
+    tables = finditer_closed(_TABLE_RE, _LAST_TABLE_CLOSE_RE, text)
+    for ti, t in enumerate(tables):
+        rows = finditer_closed(_TR_RE, _LAST_TR_CLOSE_RE, t.group(1))
+        for ri, r in enumerate(rows):
+            cells = finditer_closed(_TD_RE, _LAST_TD_CLOSE_RE, r.group(1))
+            for ci, c in enumerate(cells):
                 cell = _WS_RE.sub(" ", _TAG_RE.sub(" ", c.group(1))).strip()
                 out.append((ti, ri, ci, cell))
     return out
@@ -60,29 +63,4 @@ def extract_html_tables(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one row per table cell. Single narrow python
     stage; no shuffle — the relational table corpus materializes at scan
     parallelism."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                try:
-                    cells = _html_tables(str(url), bytes(blob) if blob is not None else b"")
-                except Exception:
-                    cells = []
-                for ti, ri, ci, cell in cells:
-                    rows.append(
-                        {
-                            "url": str(url),
-                            "table_idx": ti,
-                            "row_idx": ri,
-                            "col_idx": ci,
-                            "cell": cell,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "table_idx", "row_idx", "col_idx", "cell"]
-            )
-
-    return pages_df.select("url", "html").mapInPandas(gen, schema=TABLE_CELLS_SCHEMA)
+    return html_page_stage(pages_df, TABLE_CELLS_SCHEMA, _html_tables)

@@ -5,12 +5,15 @@ frontier scheduling, spam/host authority, and quality signals (Gopher uses
 inlink counts; Common Crawl publishes a host-level web graph). Three
 first-class operators:
 
-- :func:`extract_page_links` — byte-level anchor extraction from the raw
-  ``html`` column: charset-aware decode (kernels/encoding.py), HTML sniff
-  (non-HTML payloads emit nothing), ``<a href>`` scan, and RFC-3986
-  relative-reference resolution against the page url. One narrow
-  mapInPandas stage, zero shuffles — the same single-python-stage shape as
-  the flagship extractor, so it pipelines with extraction per partition.
+- :func:`extract_page_links` — anchor extraction from the raw ``html``
+  column through the shared page reader
+  (:func:`ocr_spark.operators.dom_query.html_page_stage`): the
+  extraction router's sniff and charset decode (non-HTML payloads emit
+  nothing; a BOM wins over ``<meta charset>``), a linear-time ``<a
+  href>`` scan, and RFC-3986 relative-reference resolution against the
+  page url. One narrow mapInPandas stage, zero shuffles — the same
+  single-python-stage shape as the flagship extractor, so it pipelines
+  with extraction per partition.
 - :func:`host_graph` — the inter-host edge rollup (src_host, dst_host,
   n_links): one hash exchange on the edge key; intra-host links are
   dropped (the standard host-graph construction — nav/self links carry no
@@ -51,6 +54,9 @@ from urllib.parse import urljoin, urlparse
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..kernels.textproc import finditer_closed
+from .dom_query import html_page_stage
+
 LINKS_SCHEMA = "url string, dst_url string, anchor string, pos int"
 
 #: tolerant anchor scanner: double/single/un-quoted href, attrs in any
@@ -59,22 +65,16 @@ _ANCHOR_RE = re.compile(
     r"<a\s[^>]*?href\s*=\s*(\"([^\"]*)\"|'([^']*)'|([^\s>]+))[^>]*>(.*?)</a>",
     re.IGNORECASE | re.DOTALL,
 )
+_LAST_ANCHOR_CLOSE_RE = re.compile(r".*</a>", re.IGNORECASE | re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
 _WS_RE = re.compile(r"\s+")
 
 
-def _page_links(url: str, blob: bytes) -> list[tuple[str, str, int]]:
-    """(dst_url, anchor, pos) anchors of one page; [] for non-HTML bytes."""
-    from ..kernels.encoding import decode_bytes, detect_bom
-    from ..kernels.md_extract import looks_like_html
-
-    if detect_bom(blob) is not None:
-        blob = decode_bytes(blob)[0].encode("utf-8")
-    if not looks_like_html(blob):
-        return []
-    text = decode_bytes(blob)[0]
+def _page_links(url: str, text: str) -> list[tuple[str, str, int]]:
+    """(dst_url, anchor, pos) anchors of one page's decoded text."""
     out = []
-    for pos, m in enumerate(_ANCHOR_RE.finditer(text)):
+    anchors = finditer_closed(_ANCHOR_RE, _LAST_ANCHOR_CLOSE_RE, text)
+    for pos, m in enumerate(anchors):
         href = m.group(2) if m.group(2) is not None else (
             m.group(3) if m.group(3) is not None else m.group(4)
         )
@@ -93,26 +93,9 @@ def _page_links(url: str, blob: bytes) -> list[tuple[str, str, int]]:
 def extract_page_links(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one row per anchor (url, dst_url, anchor, pos).
 
-    Single narrow python stage; per-document guard degrades a malformed
-    page to zero links (never fails the task), mirroring extract_batch."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    blob = bytes(html) if html is not None else b""
-                    for dst, anchor, pos in _page_links(url, blob):
-                        rows.append(
-                            {"url": url, "dst_url": dst, "anchor": anchor, "pos": pos}
-                        )
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["url", "dst_url", "anchor", "pos"])
-
-    return pages_df.select("url", "html").mapInPandas(gen, schema=LINKS_SCHEMA)
+    Single narrow python stage; a non-HTML or malformed page gives zero
+    links (never fails the task), mirroring extract_batch."""
+    return html_page_stage(pages_df, LINKS_SCHEMA, _page_links)
 
 
 #: host component of an http(s) url, JVM-side (for the rollup after the

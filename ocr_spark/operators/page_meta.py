@@ -9,15 +9,19 @@ publisher-declared bitext pairs (stronger than URL-pattern mining),
 title/description feed search snippets and quality features.
 
 Parsing contract (pinned by the closed-form oracle and unit tests):
-only the first ``HEAD_BYTES`` of the document are scanned (the head
-region; bounds per-row cost at crawl scale), attributes match in any
-order with any quoting, the FIRST occurrence of title/canonical/
-description wins, canonical hrefs resolve RFC-3986-relative against the
-page url, and malformed bytes yield NULL fields, never a task failure —
-the same degradation policy as every byte parser in this repo.
+the parsers read a page's decoded text, of which only the first
+``HEAD_BYTES`` characters are scanned (the head region; bounds per-row
+cost at crawl scale; pagination and provenance scan ``PAGINATION_BYTES``
+characters), attributes match in any order with any quoting, the FIRST
+occurrence of title/canonical/description wins, canonical hrefs resolve
+RFC-3986-relative against the page url, and a non-HTML or malformed page
+yields one all-NULL row, never a task failure — the same degradation
+policy as every byte parser in this repo.
 
-One Arrow-batched python stage, zero exchanges (plan-asserted), so it
-pipelines with the flagship extractor per partition.
+Each operator is one :func:`ocr_spark.operators.dom_query.html_page_stage`
+call: one Arrow-batched python stage, zero exchanges (plan-asserted), in
+which ``page_route`` sniffs and decodes each page once — the sidecar's
+four parsers share that one decoded text.
 """
 
 from __future__ import annotations
@@ -27,6 +31,9 @@ from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame
 
+from .dom_query import html_page_stage
+
+# head-region caps, in characters of the decoded text
 HEAD_BYTES = 65536
 
 META_SCHEMA = (
@@ -55,11 +62,8 @@ def _attrs(tag: str) -> dict[str, str]:
     }
 
 
-def _page_meta(url: str, blob: bytes) -> dict:
-    """Head-region metadata of one page; all-NULL row for non-HTML."""
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
-
+def _page_meta(url: str, text: str) -> dict:
+    """Head-region metadata of one page's decoded text."""
     out = {
         "title": None,
         "canonical_url": None,
@@ -67,9 +71,7 @@ def _page_meta(url: str, blob: bytes) -> dict:
         "html_lang": None,
         "n_hreflang": 0,
     }
-    if not blob or not looks_like_html(blob[:HEAD_BYTES]):
-        return out
-    text = decode_bytes(blob[:HEAD_BYTES])[0]
+    text = text[:HEAD_BYTES]
     m = _TITLE_RE.search(text)
     if m:
         title = _WS_RE.sub(" ", m.group(1)).strip()
@@ -130,7 +132,7 @@ def _ld_first_type(obj) -> str | None:
     return t if isinstance(t, str) and t.strip() else None
 
 
-def _og_meta(blob: bytes) -> dict:
+def _og_meta(text: str) -> dict:
     """OpenGraph + JSON-LD structured metadata of one page's head region.
 
     FIRST occurrence wins for each og:* property (the page_meta policy);
@@ -139,15 +141,10 @@ def _og_meta(blob: bytes) -> dict:
     fewer counted blocks, never a task failure."""
     import json
 
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
-
     out: dict = {k.replace(":", "_"): None for k in _OG_KEYS}
     out["ld_type"] = None
     out["n_ld"] = 0
-    if not blob or not looks_like_html(blob[:HEAD_BYTES]):
-        return out
-    text = decode_bytes(blob[:HEAD_BYTES])[0]
+    text = text[:HEAD_BYTES]
     for m in _META_RE.finditer(text):
         a = _attrs(m.group(0))
         prop = (a.get("property") or "").strip().lower()
@@ -177,17 +174,12 @@ PAGINATION_BYTES = 4 * HEAD_BYTES
 _LINK_OR_A_RE = re.compile(r"<(?:link|a)\b[^>]*>", re.IGNORECASE)
 
 
-def _pagination(url: str, blob: bytes) -> dict:
+def _pagination(url: str, text: str) -> dict:
     """rel=next / rel=prev(ious) targets of one page. ``rel`` is a
     space-separated token list per HTML spec; FIRST occurrence wins per
     direction; hrefs resolve RFC-3986-relative against the page url."""
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
-
     out = {"next_url": None, "prev_url": None}
-    if not blob or not looks_like_html(blob[:HEAD_BYTES]):
-        return out
-    text = decode_bytes(blob[:PAGINATION_BYTES])[0]
+    text = text[:PAGINATION_BYTES]
     for m in _LINK_OR_A_RE.finditer(text):
         a = _attrs(m.group(0))
         rel = set((a.get("rel") or "").strip().lower().split())
@@ -213,81 +205,20 @@ def extract_pagination(pages_df: DataFrame) -> DataFrame:
     multi-page articles into series (see contract ``pagination_chains``)
     — stitching paginated articles BEFORE extraction is what keeps one
     logical document from being sharded into quality-filter fragments."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    p = _pagination(url, bytes(html) if html is not None else b"")
-                except Exception:
-                    p = {"next_url": None, "prev_url": None}
-                rows.append({"url": url, **p})
-            yield pd.DataFrame(rows, columns=["url", "next_url", "prev_url"])
-
-    return pages_df.select("url", "html").mapInPandas(
-        gen, schema=PAGINATION_SCHEMA
-    )
+    return _meta_stage(pages_df, PAGINATION_SCHEMA, _pagination)
 
 
 def extract_og_meta(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one OpenGraph/JSON-LD row per page (all pages
     kept; non-HTML payloads carry NULL fields). Single narrow python
     stage, zero exchanges — same shape as :func:`extract_page_meta`."""
-
-    cols = ["url", "og_title", "og_type", "og_url", "og_image",
-            "ld_type", "n_ld"]
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    meta = _og_meta(bytes(html) if html is not None else b"")
-                except Exception:
-                    meta = {c: None for c in cols[1:-1]} | {"n_ld": 0}
-                rows.append({"url": url, **meta})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages_df.select("url", "html").mapInPandas(gen, schema=OG_SCHEMA)
+    return _meta_stage(pages_df, OG_SCHEMA, lambda _url, text: _og_meta(text))
 
 
 def extract_page_meta(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one metadata row per page (all pages kept;
     non-HTML payloads carry NULL fields). Single narrow python stage."""
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    meta = _page_meta(
-                        url, bytes(html) if html is not None else b""
-                    )
-                except Exception:
-                    meta = {
-                        "title": None,
-                        "canonical_url": None,
-                        "description": None,
-                        "html_lang": None,
-                        "n_hreflang": 0,
-                    }
-                rows.append({"url": url, **meta})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "title", "canonical_url", "description",
-                    "html_lang", "n_hreflang",
-                ],
-            )
-
-    return pages_df.select("url", "html").mapInPandas(gen, schema=META_SCHEMA)
+    return _meta_stage(pages_df, META_SCHEMA, _page_meta)
 
 
 PROVENANCE_SCHEMA = (
@@ -303,7 +234,7 @@ _CC_RE = re.compile(
 _TIME_TAG_RE = re.compile(r"<time\b[^>]*>", re.IGNORECASE)
 
 
-def _provenance(url: str, blob: bytes) -> dict:
+def _provenance(url: str, text: str) -> dict:
     """License + publication-time provenance of one page.
 
     - ``license_url``: first ``<link rel=license>`` / ``<a rel=license>``
@@ -316,8 +247,6 @@ def _provenance(url: str, blob: bytes) -> dict:
       or ``<time datetime=...>``, through the SAME ISO-8601/RFC-822 path
       as feeds/headers (:func:`ocr_spark.operators.feeds.parse_date_ms`).
     """
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
     from .feeds import parse_date_ms
 
     out = {
@@ -326,9 +255,7 @@ def _provenance(url: str, blob: bytes) -> dict:
         "cc_version": None,
         "published_ms": None,
     }
-    if not blob or not looks_like_html(blob[:HEAD_BYTES]):
-        return out
-    text = decode_bytes(blob[:PAGINATION_BYTES])[0]
+    text = text[:PAGINATION_BYTES]
     for m in _LINK_OR_A_RE.finditer(text):
         a = _attrs(m.group(0))
         rel = set((a.get("rel") or "").strip().lower().split())
@@ -363,25 +290,7 @@ def extract_provenance(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> (url, license_url, cc_variant, cc_version,
     published_ms); one narrow python stage, zero exchanges — the
     provenance companion to :func:`extract_page_meta`."""
-
-    cols = ["url", "license_url", "cc_variant", "cc_version", "published_ms"]
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    p = _provenance(url, bytes(html) if html is not None else b"")
-                except Exception:
-                    p = {c: None for c in cols[1:]}
-                rows.append({"url": url, **p})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages_df.select("url", "html").mapInPandas(
-        gen, schema=PROVENANCE_SCHEMA
-    )
+    return _meta_stage(pages_df, PROVENANCE_SCHEMA, _provenance)
 
 
 SIDECAR_SCHEMA = (
@@ -393,37 +302,35 @@ SIDECAR_SCHEMA = (
 )
 
 
+def _sidecar(url: str, text: str) -> dict:
+    """All four metadata families of one page's decoded text."""
+    return (
+        _page_meta(url, text)
+        | _og_meta(text)
+        | _pagination(url, text)
+        | _provenance(url, text)
+    )
+
+
 def extract_meta_sidecar(pages_df: DataFrame) -> DataFrame:
     """ALL page-metadata families (head meta + OpenGraph/JSON-LD +
     pagination + provenance) in ONE Arrow-batched python stage — one
     scan of the pages table produces the whole sidecar, instead of four
-    independent scan->parse jobs. At 100 TB the scan IS the cost; the
-    per-row parsers share the decoded head region. Wired into the
-    production CLI as ``run_job.py --sidecar-meta <dir>``."""
+    independent scan->parse jobs. At 100 TB the scan IS the cost; each
+    page is routed and decoded once and the four parsers share its
+    text. Wired into the production CLI as ``run_job.py --sidecar-meta
+    <dir>``."""
+    return _meta_stage(pages_df, SIDECAR_SCHEMA, _sidecar)
 
-    cols = [f.strip().split(" ")[0] for f in SIDECAR_SCHEMA.split(",")]
 
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                blob = bytes(html) if html is not None else b""
-                row = {"url": url}
-                try:
-                    row.update(_page_meta(url, blob))
-                    row.update(_og_meta(blob))
-                    row.update(_pagination(url, blob))
-                    row.update(_provenance(url, blob))
-                except Exception:
-                    row = {"url": url} | {
-                        c: (0 if c in ("n_hreflang", "n_ld") else None)
-                        for c in cols[1:]
-                    }
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages_df.select("url", "html").mapInPandas(
-        gen, schema=SIDECAR_SCHEMA
+def _meta_stage(pages_df: DataFrame, schema: str, parse) -> DataFrame:
+    """One row per page: ``parse(url, text)``'s dict, in ``schema`` order;
+    a non-HTML or failing page gets NULL fields and zero counts."""
+    columns = [field.split()[0] for field in schema.split(",")][1:]
+    null_row = tuple(0 if c.startswith("n_") else None for c in columns)
+    return html_page_stage(
+        pages_df,
+        schema,
+        lambda url, text: [tuple(parse(url, text)[c] for c in columns)],
+        [null_row],
     )

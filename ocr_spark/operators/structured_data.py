@@ -24,8 +24,10 @@ better-typed than OpenGraph meta (operators/page_meta.py og_* sibling).
   policy).
 
 Shape: ONE narrow MapInPandas stage over the pages scan — zero
-exchanges, the same execution contract as link_graph.extract_page_links
-/ html_tables.
+exchanges: both operators are
+:func:`ocr_spark.operators.dom_query.html_page_stage` calls, like
+link_graph.extract_page_links / html_tables, so the parsers read the
+text the extraction router decoded.
 """
 
 from __future__ import annotations
@@ -34,6 +36,8 @@ import json
 import re
 
 from pyspark.sql import DataFrame
+
+from .dom_query import html_page_stage
 
 _LD_BLOCK_RE = re.compile(
     r"<script[^>]*type\s*=\s*[\"']application/ld\+json[\"'][^>]*>(.*?)</script\s*>",
@@ -67,13 +71,8 @@ def _entities(obj):
     return []
 
 
-def _jsonld_rows(url: str, blob: bytes) -> list[tuple]:
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
-
-    if not blob or not looks_like_html(blob):
-        return []
-    text = decode_bytes(blob)[0]
+def _jsonld_rows(_url: str, text: str) -> list[tuple]:
+    """(block_idx, entity_idx, jtype, key, value) rows of one page's text."""
     rows = []
     for bi, m in enumerate(_LD_BLOCK_RE.finditer(text)):
         try:
@@ -88,7 +87,7 @@ def _jsonld_rows(url: str, blob: bytes) -> list[tuple]:
                     continue
                 v = _render(ent[k])
                 if v is not None:
-                    rows.append((url, bi, ei, jtype, k, v))
+                    rows.append((bi, ei, jtype, k, v))
     return rows
 
 
@@ -132,10 +131,10 @@ def _md_attrs(attrstr: str) -> dict:
     return attrs
 
 
-def _microdata_rows(url: str, blob: bytes) -> list[tuple]:
+def _microdata_rows(_url: str, text: str) -> list[tuple]:
     """HTML microdata (itemscope/itemtype/itemprop — the third schema.org
-    channel next to JSON-LD and OpenGraph) -> flat rows
-    (url, item_idx, item_type, prop, value).
+    channel next to JSON-LD and OpenGraph) of one page's text -> flat rows
+    (item_idx, item_type, prop, value).
 
     Items number in document order; a nested itemscope that also carries
     itemprop contributes a link row ``value = 'item:<child_idx>'`` to its
@@ -143,50 +142,43 @@ def _microdata_rows(url: str, blob: bytes) -> list[tuple]:
     values follow the spec's element table (meta->content, a/link->href,
     img->src, time->datetime, data->value); other elements take their
     whitespace-collapsed descendant text. A stray itemprop outside any
-    itemscope is ignored; malformed nesting closes tolerantly; non-HTML
-    bytes yield zero rows (codec-parser policy)."""
-    from ..kernels.encoding import decode_bytes
-    from ..kernels.md_extract import looks_like_html
-
-    if not blob or not looks_like_html(blob):
-        return []
-    text = decode_bytes(blob)[0]
+    itemscope is ignored; malformed nesting closes tolerantly: a close tag
+    pops up to the nearest open element of its name, and one with no open
+    element of its name is skipped in O(1) (open elements are counted per
+    tag name), so the scan is linear in the page."""
     rows: list[tuple] = []
     next_idx = 0
-    # stack entries: {tag, item: (idx, type) scoping descendants, collector}
-    stack: list[dict] = []
-    collectors: list[dict] = []
+    # stack entries: (tag, item (idx, type) scoping descendants, collector);
+    # a collector is (item_idx, item_type, prop, text parts)
+    stack: list[tuple] = []
+    open_tags: dict[str, int] = {}
+    collectors: list[tuple] = []
+
+    def pop() -> str:
+        tag, _item, c = stack.pop()
+        open_tags[tag] -= 1
+        if c is not None:
+            collectors.pop()  # stack order: c is the innermost collector
+            rows.append((*c[:3], " ".join("".join(c[3]).split())))
+        return tag
+
     pos = 0
     for m in _MD_TAG_RE.finditer(text):
         seg = text[pos : m.start()]
         if seg:
             for c in collectors:
-                c["parts"].append(seg)
+                c[3].append(seg)
         pos = m.end()
         closing, tag, attrstr = m.groups()
         tag = tag.lower()
         if closing:
-            for i in range(len(stack) - 1, -1, -1):
-                if stack[i]["tag"] == tag:
-                    while len(stack) > i:
-                        ent = stack.pop()
-                        c = ent.get("collector")
-                        if c is not None:
-                            collectors.remove(c)
-                            rows.append(
-                                (
-                                    url,
-                                    c["item_idx"],
-                                    c["item_type"],
-                                    c["prop"],
-                                    " ".join("".join(c["parts"]).split()),
-                                )
-                            )
-                    break
+            if open_tags.get(tag):
+                while pop() != tag:
+                    pass
             continue
         attrs = _md_attrs(attrstr)
         is_void = tag in _MD_VOID or attrstr.rstrip().endswith("/")
-        enclosing = stack[-1]["item"] if stack else None
+        enclosing = stack[-1][1] if stack else None
         item_for_children = enclosing
         collector = None
         if "itemscope" in attrs:
@@ -194,26 +186,20 @@ def _microdata_rows(url: str, blob: bytes) -> list[tuple]:
             next_idx += 1
             itype = attrs.get("itemtype") or None
             if "itemprop" in attrs and enclosing is not None:
-                rows.append(
-                    (url, enclosing[0], enclosing[1], attrs["itemprop"], f"item:{idx}")
-                )
+                rows.append((*enclosing, attrs["itemprop"], f"item:{idx}"))
             item_for_children = (idx, itype)
         elif attrs.get("itemprop") and enclosing is not None:
             prop = attrs["itemprop"]
             src = _MD_ATTR_VALUE.get(tag)
             if src is not None and attrs.get(src) is not None:
-                rows.append((url, enclosing[0], enclosing[1], prop, attrs[src]))
+                rows.append((*enclosing, prop, attrs[src]))
             elif is_void:
-                rows.append((url, enclosing[0], enclosing[1], prop, ""))
+                rows.append((*enclosing, prop, ""))
             else:
-                collector = {
-                    "item_idx": enclosing[0],
-                    "item_type": enclosing[1],
-                    "prop": prop,
-                    "parts": [],
-                }
+                collector = (*enclosing, prop, [])
         if not is_void:
-            stack.append({"tag": tag, "item": item_for_children, "collector": collector})
+            stack.append((tag, item_for_children, collector))
+            open_tags[tag] = open_tags.get(tag, 0) + 1
             if collector is not None:
                 collectors.append(collector)
     # tolerate unclosed text-prop elements at EOF: feed the trailing text
@@ -221,66 +207,20 @@ def _microdata_rows(url: str, blob: bytes) -> list[tuple]:
     tail = text[pos:]
     if tail:
         for c in collectors:
-            c["parts"].append(tail)
+            c[3].append(tail)
     while stack:
-        ent = stack.pop()
-        c = ent.get("collector")
-        if c is not None:
-            collectors.remove(c)
-            rows.append(
-                (
-                    url,
-                    c["item_idx"],
-                    c["item_type"],
-                    c["prop"],
-                    " ".join("".join(c["parts"]).split()),
-                )
-            )
+        pop()
     return rows
 
 
-def extract_microdata(pages_df: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_microdata(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one row per microdata property / nested-item
     link. Single narrow python stage; no shuffle (same contract as
     extract_jsonld / html_tables)."""
-
-    def gen(batches):
-        import pandas as pd
-
-        cols = ["url", "item_idx", "item_type", "prop", "value"]
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf[html_col]):
-                try:
-                    rows.extend(
-                        _microdata_rows(
-                            str(url), bytes(blob) if blob is not None else b""
-                        )
-                    )
-                except Exception:
-                    pass
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages_df.select("url", html_col).mapInPandas(gen, schema=MICRODATA_SCHEMA)
+    return html_page_stage(pages_df, MICRODATA_SCHEMA, _microdata_rows)
 
 
-def extract_jsonld(pages_df: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_jsonld(pages_df: DataFrame) -> DataFrame:
     """pages (url, html) -> one row per scalar JSON-LD entity field.
     Single narrow python stage; no shuffle."""
-
-    def gen(batches):
-        import pandas as pd
-
-        cols = ["url", "block_idx", "entity_idx", "jtype", "key", "value"]
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf[html_col]):
-                try:
-                    rows.extend(
-                        _jsonld_rows(str(url), bytes(blob) if blob is not None else b"")
-                    )
-                except Exception:
-                    pass
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages_df.select("url", html_col).mapInPandas(gen, schema=JSONLD_SCHEMA)
+    return html_page_stage(pages_df, JSONLD_SCHEMA, _jsonld_rows)

@@ -16,9 +16,9 @@ DataFrame (path, n_records, n_bytes) is what the caller commits.
 
 The envelope reuses the SAME kernels as the page_meta / page_links
 queries (operators/page_meta._page_meta, operators/link_graph._page_links)
-so the sidecar always agrees with the queryable tables; JSON is
-canonicalized (sort_keys, tight separators) so records are reproducible
-byte-for-byte.
+on the text of one ``page_route`` call per page, so the sidecar always
+agrees with the queryable tables; JSON is canonicalized (sort_keys,
+tight separators) so records are reproducible byte-for-byte.
 
 Round-trip guarantee: ``read_wat`` parses the metadata records back into
 (url, warc_ts, envelope) rows — pinned by tests/test_wat.py.
@@ -40,13 +40,16 @@ WAT_SCHEMA = "path string, n_records long, n_bytes long"
 
 def wat_envelope(url: str, ts_s: str, blob: bytes) -> str:
     """Canonical JSON envelope for one page (sorted keys, no whitespace)."""
+    from ..operators.extract import page_route
     from ..operators.link_graph import _page_links
     from ..operators.page_meta import _page_meta
 
-    meta = _page_meta(url, blob)
+    route, text = page_route(blob)
+    text = text if route == "html" else ""  # no markup: NULL head, no links
+    meta = _page_meta(url, text)
     links = [
         {"pos": pos, "text": anchor, "url": dst}
-        for dst, anchor, pos in _page_links(url, blob)
+        for dst, anchor, pos in _page_links(url, text)
     ]
     env = {
         "Envelope": {

@@ -5,13 +5,16 @@ parallelism-invariance of the fixed-point arithmetic."""
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.kernels.textproc import finditer_closed
 from ocr_spark.operators.link_graph import (
+    _LAST_ANCHOR_CLOSE_RE,
     _page_links,
     extract_page_links,
     host_graph,
     pagerank_hosts,
 )
 from ocr_spark.operators.search import bm25_topk
+from tests.conftest import run_stage
 
 
 # ---------------------------------------------------------------------------
@@ -20,15 +23,15 @@ from ocr_spark.operators.search import bm25_topk
 
 def test_anchor_extraction_forms():
     html = (
-        b"<!DOCTYPE html><html><body>"
-        b'<a href="https://x.example/a">double</a>'
-        b"<a href='https://x.example/b'>single</a>"
-        b"<a href=https://x.example/c>bare</a>"
-        b'<a class="z" href="/rel">rel <b>bold</b> text</a>'
-        b'<a href="#frag">frag</a>'
-        b'<a href="javascript:void(0)">js</a>'
-        b'<a href="mailto:a@b.c">mail</a>'
-        b"</body></html>"
+        "<!DOCTYPE html><html><body>"
+        '<a href="https://x.example/a">double</a>'
+        "<a href='https://x.example/b'>single</a>"
+        "<a href=https://x.example/c>bare</a>"
+        '<a class="z" href="/rel">rel <b>bold</b> text</a>'
+        '<a href="#frag">frag</a>'
+        '<a href="javascript:void(0)">js</a>'
+        '<a href="mailto:a@b.c">mail</a>'
+        "</body></html>"
     )
     links = _page_links("https://site.example/p/1", html)
     assert [(d, a) for d, a, _ in links] == [
@@ -41,19 +44,76 @@ def test_anchor_extraction_forms():
     assert [p for _, _, p in links] == [0, 1, 2, 3]
 
 
+def _links(url, blob):
+    """(dst_url, anchor, pos) rows of extract_page_links for one page."""
+    return [
+        (r["dst_url"], r["anchor"], r["pos"])
+        for r in run_stage(extract_page_links, [(url, blob)])
+    ]
+
+
 def test_anchor_extraction_skips_non_html():
-    assert _page_links("https://s.example/x", b"%PDF-1.7 junk") == []
-    assert _page_links("https://s.example/x", b"\x89PNG\r\n\x1a\n") == []
-    assert _page_links("https://s.example/x", b"plain words only here") == []
+    assert _links("https://s.example/x", b"%PDF-1.7 junk") == []
+    assert _links("https://s.example/x", b"\x89PNG\r\n\x1a\n") == []
+    assert _links("https://s.example/x", b"plain words only here") == []
 
 
 def test_anchor_extraction_charset_flavors():
     # utf-16-le with BOM: decode-then-scan must still see the anchors
     html = '<!DOCTYPE html><html><body><a href="https://y.example/q">t</a></body></html>'
     blob = b"\xff\xfe" + html.encode("utf-16-le")
-    assert _page_links("https://s.example/x", blob) == [
-        ("https://y.example/q", "t", 0)
-    ]
+    assert _links("https://s.example/x", blob) == [("https://y.example/q", "t", 0)]
+    # a BOM wins over a <meta charset> naming another codec (UTF-16 and
+    # UTF-8 BOMs alike)
+    html = (
+        '<!DOCTYPE html><html><head><meta charset="windows-1252"></head>'
+        '<body><a href="/q">Crème brûlée</a></body></html>'
+    )
+    for blob in (
+        b"\xff\xfe" + html.encode("utf-16-le"),
+        b"\xef\xbb\xbf" + html.encode("utf-8"),
+    ):
+        assert _links("https://s.example/x", blob) == [
+            ("https://s.example/q", "Crème brûlée", 0)
+        ]
+
+
+def test_unclosed_anchors_time_is_linear():
+    """An <a href> with no </a> after it must not scan to the end of the
+    page: 4x the anchors (half closed, then half unclosed) may cost at most
+    6x the CPU (the scan measured ~18x)."""
+    import time
+
+    def cpu_s(n):
+        text = "<html><body>" + '<a href="/x">t</a>' * n + '<a href="/y">t' * n
+        best = float("inf")
+        for _ in range(5):
+            t0 = time.process_time()
+            links = _page_links("https://s.example/", text)
+            best = min(best, time.process_time() - t0)
+        assert len(links) == n
+        return best
+
+    n = 2000
+    small, large = cpu_s(n), cpu_s(4 * n)
+    assert large / small < 6, f"{n}: {small:.4f} s, {4 * n}: {large:.4f} s"
+
+
+def test_anchor_scan_matches_unbounded_regex():
+    """Stopping the scan at the last </a> finds the same matches as the
+    unbounded scan on random tag soups."""
+    import random
+
+    from ocr_spark.operators.link_graph import _ANCHOR_RE
+
+    tokens = ['<a href="/x">', "<A HREF=/y>", "<a name=z>", "</a>", "</A>",
+              "<a ", "href=", ">", "<b>", "t", " ", "\n"]
+    rng = random.Random(7)
+    for _ in range(2000):
+        text = "".join(rng.choice(tokens) for _ in range(rng.randint(0, 30)))
+        want = [m.group(0) for m in _ANCHOR_RE.finditer(text)]
+        got = [m.group(0) for m in finditer_closed(_ANCHOR_RE, _LAST_ANCHOR_CLOSE_RE, text)]
+        assert got == want, text
 
 
 # ---------------------------------------------------------------------------

@@ -95,3 +95,18 @@ def test_every_module_is_reached_from_an_entry_point():
         todo.extend(m for m in _imports_of(name, mods[name]) if m in mods)
     unreached = sorted(m for m in mods if m.startswith("ocr_spark") and m not in seen)
     assert unreached == []
+
+
+def test_only_the_router_sniffs_pages():
+    """Operators read page bytes through ``extract.page_route``: no other
+    module under ``ocr_spark/operators`` names the byte sniffers, so no
+    operator can grow a second sniff-and-decode path."""
+    sniffers = ("looks_like_html", "detect_bom")
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, "ocr_spark", "operators", "*.py"))):
+        if os.path.basename(path) == "extract.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            source = f.read()
+        found += [(os.path.basename(path), s) for s in sniffers if s in source]
+    assert found == []

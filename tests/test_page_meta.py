@@ -2,16 +2,28 @@
 relative canonical resolution, non-HTML degradation, plan shape."""
 
 from ocr_spark.operators.page_meta import _page_meta, extract_page_meta
+from tests.conftest import run_stage
+
+#: a UTF-16-LE page with a BOM whose <meta charset> names another codec:
+#: the BOM decides how it decodes
+_UTF16_PAGE = b"\xff\xfe" + (
+    '<!DOCTYPE html><html lang="fr"><head><meta charset="windows-1252">'
+    "<title>Café crème</title>"
+    '<meta property="og:title" content="Crème brûlée">'
+    '<script type="application/ld+json">{"@type":"Recipe"}</script>'
+    '<link rel="next" href="/p/2">'
+    "</head><body><p>x</p></body></html>"
+).encode("utf-16-le")
 
 
 def test_page_meta_full_head():
     html = (
-        b'<!DOCTYPE html><html lang="en-US"><head>'
-        b"<title>  A\n  Title </title>"
-        b'<link href="/canon/1" rel="canonical">'
-        b'<meta content="Hello  world" name="description">'
-        b"<link rel='alternate' hreflang='fr' href='https://fr.x/p'>"
-        b"</head><body></body></html>"
+        '<!DOCTYPE html><html lang="en-US"><head>'
+        "<title>  A\n  Title </title>"
+        '<link href="/canon/1" rel="canonical">'
+        '<meta content="Hello  world" name="description">'
+        "<link rel='alternate' hreflang='fr' href='https://fr.x/p'>"
+        "</head><body></body></html>"
     )
     m = _page_meta("https://a.example/p/1?q=2", html)
     assert m == {
@@ -25,10 +37,10 @@ def test_page_meta_full_head():
 
 def test_page_meta_first_occurrence_wins_and_missing_fields():
     html = (
-        b"<html><head><title>first</title><title>second</title>"
-        b'<link rel="canonical" href="https://c.x/1">'
-        b'<link rel="canonical" href="https://c.x/2">'
-        b"</head></html>"
+        "<html><head><title>first</title><title>second</title>"
+        '<link rel="canonical" href="https://c.x/1">'
+        '<link rel="canonical" href="https://c.x/2">'
+        "</head></html>"
     )
     m = _page_meta("https://a.example/", html)
     assert m["title"] == "first"
@@ -38,12 +50,21 @@ def test_page_meta_first_occurrence_wins_and_missing_fields():
 
 
 def test_page_meta_non_html_and_empty():
-    assert _page_meta("https://a.example/x", b"%PDF-1.7 junk")["title"] is None
-    assert _page_meta("https://a.example/x", b"")["n_hreflang"] == 0
+    rows = run_stage(
+        extract_page_meta,
+        [("https://a.example/x", b"%PDF-1.7 junk"), ("https://a.example/y", b"")],
+    )
+    assert [(r["title"], r["n_hreflang"]) for r in rows] == [(None, 0), (None, 0)]
+    assert _page_meta("https://a.example/x", "")["n_hreflang"] == 0
+
+
+def test_page_meta_utf16_bom_page():
+    (row,) = run_stage(extract_page_meta, [("https://a.example/", _UTF16_PAGE)])
+    assert (row["title"], row["html_lang"]) == ("Café crème", "fr")
 
 
 def test_page_meta_bare_attr_quoting():
-    html = b"<html lang=fr><head><link rel=canonical href=https://c.x/b></head></html>"
+    html = "<html lang=fr><head><link rel=canonical href=https://c.x/b></head></html>"
     m = _page_meta("https://a.example/", html)
     assert m["html_lang"] == "fr"
     assert m["canonical_url"] == "https://c.x/b"
@@ -70,11 +91,11 @@ from ocr_spark.operators.page_meta import _og_meta, extract_og_meta
 
 def test_og_meta_first_wins_and_quoting():
     html = (
-        b"<html><head>"
-        b"<meta content='T1' property='og:title'>"  # single quotes, attr order
-        b'<meta property="og:title" content="T2-loses">'
-        b'<meta property="og:image" content="  https://i.x/a.jpg ">'
-        b"</head></html>"
+        "<html><head>"
+        "<meta content='T1' property='og:title'>"  # single quotes, attr order
+        '<meta property="og:title" content="T2-loses">'
+        '<meta property="og:image" content="  https://i.x/a.jpg ">'
+        "</head></html>"
     )
     m = _og_meta(html)
     assert m["og_title"] == "T1"
@@ -84,13 +105,13 @@ def test_og_meta_first_wins_and_quoting():
 
 def test_og_meta_jsonld_variants():
     html = (
-        b"<html><head>"
-        b'<script type="application/ld+json">{"@type": broken</script>'
-        b'<script type="application/ld+json">'
-        b'{"@graph":[{"@type":["NewsArticle","Article"]},{"@type":"x"}]}'
-        b"</script>"
-        b'<script type="application/ld+json">{"@type":"WebSite"}</script>'
-        b"</head></html>"
+        "<html><head>"
+        '<script type="application/ld+json">{"@type": broken</script>'
+        '<script type="application/ld+json">'
+        '{"@graph":[{"@type":["NewsArticle","Article"]},{"@type":"x"}]}'
+        "</script>"
+        '<script type="application/ld+json">{"@type":"WebSite"}</script>'
+        "</head></html>"
     )
     m = _og_meta(html)
     # malformed block skipped; first parseable wins; list @type -> first
@@ -99,8 +120,13 @@ def test_og_meta_jsonld_variants():
 
 
 def test_og_meta_non_html():
-    m = _og_meta(b"%PDF-1.7 junk")
+    (m,) = run_stage(extract_og_meta, [("u", b"%PDF-1.7 junk")])
     assert m["og_title"] is None and m["n_ld"] == 0
+
+
+def test_og_meta_utf16_bom_page():
+    (m,) = run_stage(extract_og_meta, [("u", _UTF16_PAGE)])
+    assert (m["og_title"], m["ld_type"], m["n_ld"]) == ("Crème brûlée", "Recipe", 1)
 
 
 def test_og_meta_plan_single_python_stage(spark):
@@ -125,12 +151,12 @@ from ocr_spark.operators.page_meta import _pagination, extract_pagination
 
 def test_pagination_link_and_anchor_forms():
     html = (
-        b"<html><head>"
-        b'<link rel="next" href="/part-2">'
-        b"</head><body>"
-        b"<a href='/part-0' rel='nofollow previous'>back</a>"
-        b'<a rel="next" href="/part-9-loses">decoy second next</a>'
-        b"</body></html>"
+        "<html><head>"
+        '<link rel="next" href="/part-2">'
+        "</head><body>"
+        "<a href='/part-0' rel='nofollow previous'>back</a>"
+        '<a rel="next" href="/part-9-loses">decoy second next</a>'
+        "</body></html>"
     )
     p = _pagination("https://s.example/art/part-1", html)
     # relative hrefs resolve against the page url; FIRST next wins
@@ -141,13 +167,14 @@ def test_pagination_link_and_anchor_forms():
 def test_pagination_rel_token_list_and_prev_alias():
     p = _pagination(
         "https://s.example/a",
-        b'<html><a href="/p" rel="prev">x</a><a href="/n" rel="NEXT">y</a></html>',
+        '<html><a href="/p" rel="prev">x</a><a href="/n" rel="NEXT">y</a></html>',
     )
     assert p["prev_url"] == "https://s.example/p"
     assert p["next_url"] == "https://s.example/n"
     # rel-less anchors and non-html are ignored
-    assert _pagination("u", b'<html><a href="/x">y</a></html>')["next_url"] is None
-    assert _pagination("u", b"%PDF-junk")["next_url"] is None
+    assert _pagination("u", '<html><a href="/x">y</a></html>')["next_url"] is None
+    (row,) = run_stage(extract_pagination, [("u", b"%PDF-junk")])
+    assert row["next_url"] is None
 
 
 def test_pagination_plan_zero_exchange(spark):
@@ -171,9 +198,9 @@ from ocr_spark.operators.page_meta import _provenance
 
 def test_provenance_cc_license_link():
     html = (
-        b"<html><body><a rel='license' "
-        b"href='https://creativecommons.org/licenses/by-nc-sa/3.0/'>cc</a>"
-        b"</body></html>"
+        "<html><body><a rel='license' "
+        "href='https://creativecommons.org/licenses/by-nc-sa/3.0/'>cc</a>"
+        "</body></html>"
     )
     p = _provenance("https://s.example/a", html)
     assert p["license_url"].endswith("/by-nc-sa/3.0/")
@@ -183,15 +210,15 @@ def test_provenance_cc_license_link():
 def test_provenance_relative_license_and_body_cc0():
     p = _provenance(
         "https://s.example/a",
-        b'<html><link rel="license" href="/LICENSE"></html>',
+        '<html><link rel="license" href="/LICENSE"></html>',
     )
     assert p["license_url"] == "https://s.example/LICENSE"
     assert p["cc_variant"] is None
     # CC0 url in the body without rel=license still yields the variant
     p = _provenance(
         "https://s.example/a",
-        b'<html><a href="https://creativecommons.org/publicdomain/zero/1.0/">'
-        b"CC0</a></html>",
+        '<html><a href="https://creativecommons.org/publicdomain/zero/1.0/">'
+        "CC0</a></html>",
     )
     assert p["license_url"] is None
     assert p["cc_variant"] == "zero" and p["cc_version"] == "1.0"
@@ -200,21 +227,24 @@ def test_provenance_relative_license_and_body_cc0():
 def test_provenance_published_time_fallback_chain():
     # meta wins over time tag
     html = (
-        b'<html><head><meta property="article:published_time" '
-        b'content="2026-01-02T03:04:05Z"></head>'
-        b'<body><time datetime="2020-01-01T00:00:00Z">old</time></body></html>'
+        '<html><head><meta property="article:published_time" '
+        'content="2026-01-02T03:04:05Z"></head>'
+        '<body><time datetime="2020-01-01T00:00:00Z">old</time></body></html>'
     )
     p = _provenance("u", html)
     assert p["published_ms"] == 1767323045000
     # invalid meta falls through to the time tag
     html = (
-        b'<html><meta property="article:published_time" content="yesterday">'
-        b'<time datetime="2026-01-02T03:04:05Z">t</time></html>'
+        '<html><meta property="article:published_time" content="yesterday">'
+        '<time datetime="2026-01-02T03:04:05Z">t</time></html>'
     )
     assert _provenance("u", html)["published_ms"] == 1767323045000
     # neither -> None; non-html -> all None
-    assert _provenance("u", b"<html><p>x</p></html>")["published_ms"] is None
-    assert _provenance("u", b"%PDF-junk")["license_url"] is None
+    assert _provenance("u", "<html><p>x</p></html>")["published_ms"] is None
+    from ocr_spark.operators.page_meta import extract_provenance
+
+    (row,) = run_stage(extract_provenance, [("u", b"%PDF-junk")])
+    assert row["license_url"] is None and row["published_ms"] is None
 
 
 def test_meta_sidecar_fused_single_stage(spark):
@@ -247,3 +277,30 @@ def test_meta_sidecar_fused_single_stage(spark):
     assert r.cc_variant == "by" and r.published_ms == 1767323045000
     b = rows["https://s.example/bin"]
     assert b.title is None and b.n_ld == 0 and b.license_url is None
+
+
+def test_meta_sidecar_decodes_each_page_once(monkeypatch):
+    """The sidecar's four parsers share one routed, decoded text per page:
+    ``decode_bytes`` runs once per page, whichever module calls it."""
+    import ocr_spark.kernels.encoding as encoding
+    import ocr_spark.operators.extract as extract
+    from ocr_spark.operators.page_meta import extract_meta_sidecar
+
+    calls = []
+    real = encoding.decode_bytes
+
+    def counting(blob):
+        calls.append(len(blob))
+        return real(blob)
+
+    monkeypatch.setattr(encoding, "decode_bytes", counting)
+    monkeypatch.setattr(extract, "decode_bytes", counting)
+    pages = [
+        ("https://s.example/1", b'<html><head><title>T1</title></head></html>'),
+        ("https://s.example/2", "<html><title>Café</title></html>".encode("cp1252")),
+        ("https://s.example/3", _UTF16_PAGE),
+    ]
+    rows = run_stage(extract_meta_sidecar, pages)
+    assert len(calls) == len(pages)
+    assert [r["title"] for r in rows] == ["T1", "Café", "Café crème"]
+    assert rows[2]["next_url"] == "https://s.example/p/2"

@@ -40,6 +40,78 @@ def test_parse_docx_tabs_and_breaks():
     assert parse_docx(buf.getvalue())[0]["text"] == "a\tb\nc"
 
 
+def _docx_of(document_xml: bytes) -> bytes:
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("word/document.xml", document_xml)
+    return buf.getvalue()
+
+
+def test_docx_unclosed_tags_time_is_linear():
+    """An unclosed <w:p> or <w:t> must not scan to the end of document.xml:
+    through extract_batch, 4x the repeats (half closed, then half
+    unclosed) may cost at most 6x the CPU (the lazy spans measured
+    ~14x)."""
+    import time
+
+    import pandas as pd
+
+    from ocr_spark.operators.extract import extract_batch
+
+    def cpu_s(xml):
+        chunk = pd.DataFrame(
+            {"url": ["u"], "warc_ts": [None], "lang": ["en"], "html": [_docx_of(xml)]}
+        )
+        best = float("inf")
+        for _ in range(5):
+            t0 = time.process_time()
+            extract_batch(chunk)
+            best = min(best, time.process_time() - t0)
+        return best
+
+    def doc(n, closed, unclosed, head=b"", tail=b""):
+        return b"<w:body>" + head + closed * n + unclosed * n + tail
+
+    n = 5000
+    for args in (
+        (b"<w:p><w:t>x</w:t></w:p>", b"<w:p><w:t>x</w:t>"),  # unclosed w:p
+        (b"<w:t>x</w:t>", b"<w:t>x", b"<w:p>", b"</w:p>"),  # unclosed w:t
+    ):
+        small, large = cpu_s(doc(n, *args)), cpu_s(doc(4 * n, *args))
+        assert large / small < 6, f"{args[1]!r}: {small:.3f} s, {large:.3f} s"
+
+
+def test_docx_scans_match_unbounded_regexes():
+    """The linear w:p / w:t scans find the same matches as the plain lazy
+    regexes on random tag soups, self-closing tags after the last closer
+    included."""
+    import random
+    import re
+
+    from ocr_spark.kernels import doc_parsers as dp
+    from ocr_spark.kernels.textproc import finditer_closed
+
+    w_p = re.compile(rb"<w:p[ >].*?</w:p>|<w:p/>", re.S)
+    w_t = re.compile(rb"<w:t(?: [^>]*)?>(.*?)</w:t>|<w:tab/>|<w:br/>", re.S)
+    assert (dp._W_P_RE.pattern, dp._W_T_RE.pattern) == (w_p.pattern, w_t.pattern)
+    tokens = [b"<w:p>", b'<w:p w:x="1">', b"</w:p>", b"<w:p/>", b"<w:t>",
+              b'<w:t xml:space="preserve">', b"</w:t>", b"<w:tab/>", b"<w:br/>",
+              b"<w:r>", b"x", b" ", b">", b"<"]
+    rng = random.Random(3)
+    for _ in range(3000):
+        data = b"".join(rng.choice(tokens) for _ in range(rng.randint(0, 30)))
+        for pattern, close, empty in (
+            (dp._W_P_RE, dp._W_P_CLOSE_RE, dp._W_P_EMPTY_RE),
+            (dp._W_T_RE, dp._W_T_CLOSE_RE, dp._W_T_EMPTY_RE),
+        ):
+            want = [m.span() for m in pattern.finditer(data)]
+            got = [m.span() for m in finditer_closed(pattern, close, data, empty)]
+            assert got == want, data
+
+
 def test_python_split_rejoin_identity():
     src = (
         "import os\n\n# comment block\n\ndef f():\n    return 1\n\n"

@@ -293,36 +293,43 @@ def test_parse_date_ms_total_function(s):
     assert ms is None or isinstance(ms, int)
 
 
+def _routed_texts(blob: bytes) -> list[str]:
+    """What the shared page reader hands its parsers for ``blob``: the
+    router's text on the html route; the bytes' latin-1 reading too, so
+    junk that is not routed as html still reaches the parsers."""
+    from ocr_spark.operators.extract import page_route
+
+    route, payload = page_route(blob)
+    return ([payload] if route == "html" else []) + [blob.decode("latin-1")]
+
+
 @given(st.text(max_size=200), _junk)
 @settings(max_examples=100, deadline=None)
 def test_meta_extractors_never_raise(url, blob):
-    from ocr_spark.operators.page_meta import (
-        _og_meta,
-        _page_meta,
-        _pagination,
-        _provenance,
-    )
+    from ocr_spark.operators.page_meta import _sidecar
 
-    _page_meta(url, blob)
-    _og_meta(blob)
-    _pagination(url, blob)
-    _provenance(url, blob)
+    for text in _routed_texts(blob):
+        _sidecar(url, text)
 
 
 @given(st.text(max_size=200), _junk)
 @settings(max_examples=100, deadline=None)
 def test_structured_data_extractors_never_raise(url, blob):
-    """jsonld / microdata / html-table byte parsers obey the degradation
-    contract: junk bytes -> fewer rows, never a task failure."""
+    """jsonld / microdata / html-table parsers obey the degradation
+    contract: junk -> fewer rows, never a task failure."""
     from ocr_spark.operators.html_tables import _html_tables
+    from ocr_spark.operators.link_graph import _page_links
     from ocr_spark.operators.structured_data import _jsonld_rows, _microdata_rows
 
-    for row in _jsonld_rows(url, blob):
-        assert row[0] == url
-    for row in _microdata_rows(url, blob):
-        assert row[0] == url
-    for (t, r, c, v) in _html_tables(url, blob):
-        assert isinstance(v, str)
+    for text in _routed_texts(blob):
+        for row in _jsonld_rows(url, text):
+            assert len(row) == 5
+        for row in _microdata_rows(url, text):
+            assert len(row) == 4
+        for (t, r, c, v) in _html_tables(url, text):
+            assert isinstance(v, str)
+        for dst, anchor, pos in _page_links(url, text):
+            assert isinstance(anchor, str) and isinstance(pos, int)
 
 
 # a structure-biased generator: raw junk plus junk wrapped in the syntactic
@@ -341,9 +348,10 @@ def test_structured_data_marked_junk_never_raises(blob):
     from ocr_spark.operators.html_tables import _html_tables
     from ocr_spark.operators.structured_data import _jsonld_rows, _microdata_rows
 
-    _jsonld_rows("u", blob)
-    _microdata_rows("u", blob)
-    _html_tables("u", blob)
+    for text in _routed_texts(blob):
+        _jsonld_rows("u", text)
+        _microdata_rows("u", text)
+        _html_tables("u", text)
 
 
 @given(st.one_of(_junk, st.text(max_size=400)))

@@ -91,3 +91,38 @@ def test_tracer_sees_every_wrapped_kernel():
     assert len(out) == len(pages)
     assert {name for name, _, _ in tracer.spans} == {name for _, _, name in WRAPPED}
     assert extract.extract_page.__name__ == "extract_page"  # originals restored
+
+
+def test_failed_payload_page_lines_are_not_decoded(monkeypatch):
+    """A payload page that fails mid-plan takes its appended lines back:
+    the chunk's one CTC decode gets only the good page's lines, and the
+    good page's text does not change."""
+    import json
+
+    from ocr_spark.kernels import ctc
+    from ocr_spark.operators.extract import extract_batch
+    from ocr_spark.sources.pages import PAYLOAD_MAGIC
+
+    def payload(words):
+        lines = [
+            {"boxes": [[10, 10 + 30 * i, 60, 30 + 30 * i]], "words": [w]}
+            for i, w in enumerate(words)
+        ]
+        return PAYLOAD_MAGIC + json.dumps({"lines": lines}).encode()
+
+    good = ("good", payload(["alpha", "beta"]))
+    bad = ("bad", payload(["gamma", 7]))  # the second word is not a string
+    alone = extract_batch(_chunk([good]))
+
+    batches = []
+    real = ctc.decode_batch
+
+    def recording(jobs, vocab, method):
+        batches.append(len(jobs))
+        return real(jobs, vocab, method)
+
+    monkeypatch.setattr(ctc, "decode_batch", recording)
+    out = extract_batch(_chunk([good, bad]))
+    assert batches == [2]  # the good page's two lines only
+    assert out["text"].tolist() == [alone["text"][0], ""]
+    assert alone["text"][0]
