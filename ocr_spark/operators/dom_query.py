@@ -3,12 +3,13 @@
 
 Every side operator that reads ``pages.html`` as HTML (CSS queries, page
 metadata and its sidecar, anchors, web tables, JSON-LD, microdata) is one
-call to :func:`html_page_stage`. A page is parsed iff the extraction job's
-router (``operators.extract.page_route``) sends it down the html route, so
-the sniff and the charset decode (a BOM wins over ``<meta charset>``) are
-the extractor's own and happen once per page; PDF/image/docx/%OCRPAYLOAD%/
-plain-text pages and pages whose parse raises yield the operator's empty
-rows, never a task failure.
+call to :func:`html_page_stage`, and the WAT envelope (sources/wat.py)
+reads its pages through the same :func:`html_text`. A page is parsed iff
+the extraction job's router (``operators.extract.page_route``) sends it
+down the html route, so the sniff and the charset decode (a BOM wins over
+``<meta charset>``) are the extractor's own and happen once per page, over
+the whole page; PDF/image/docx/%OCRPAYLOAD%/plain-text pages and pages
+whose parse raises yield the operator's empty rows, never a task failure.
 
 Reference parity: the reference parses HTML with BeautifulSoup
 (/root/reference/utils/text/parsers/html_parser.py:119-159) and its users
@@ -30,35 +31,38 @@ from pyspark.sql import DataFrame
 SELECT_SCHEMA = "url string, selector string, match_idx int, tag string, text string"
 
 
-def page_rows(parse: Callable, url, html, empty: Iterable[tuple] = ()) -> list[tuple]:
-    """One page -> its ``(url, *row)`` rows: ``parse(url, text)`` returns
-    the rows of an html-route page's decoded text; any other page, or a
-    parse that raises, gives the ``empty`` rows."""
-    from .extract import _guard, page_route
+def html_text(blob) -> str | None:
+    """One page's decoded text if ``page_route`` sends it down the html
+    route, else None: the one rule for "this page is HTML"."""
+    from .extract import page_route
 
-    route, text = _guard(page_route, html) or ("binary", None)
-    rows = _guard(parse, url, text) if route == "html" else None
-    return [(url, *row) for row in (empty if rows is None else rows)]
+    route, text = page_route(blob)
+    return text if route == "html" else None
 
 
 def html_page_stage(
     pages: DataFrame, schema: str, parse: Callable, empty: Iterable[tuple] = ()
 ) -> DataFrame:
-    """pages (url, html) -> ``schema`` rows, :func:`page_rows` per page in
-    one mapInPandas stage. ``schema``'s first column is the url."""
+    """pages (url, html) -> ``schema`` rows in one mapInPandas stage.
+    ``parse(url, text)`` returns the rows of an html page's decoded text
+    (:func:`html_text`); any other page, or a parse that raises, gives the
+    ``empty`` rows. Each row is prefixed with its url, ``schema``'s first
+    column."""
     columns = [field.split()[0] for field in schema.split(",")]
     empty = list(empty)
 
     def gen(batches):
         import pandas as pd
 
+        from .extract import _guard
+
         for pdf in batches:
-            rows = [
-                row
-                for url, html in zip(pdf["url"], pdf["html"])
-                for row in page_rows(parse, url, html, empty)
-            ]
-            yield pd.DataFrame(rows, columns=columns)
+            out = []
+            for url, html in zip(pdf["url"], pdf["html"]):
+                text = _guard(html_text, html)
+                rows = None if text is None else _guard(parse, url, text)
+                out.extend((url, *row) for row in (empty if rows is None else rows))
+            yield pd.DataFrame(out, columns=columns)
 
     return pages.select("url", "html").mapInPandas(gen, schema=schema)
 

@@ -10,9 +10,10 @@ title/description feed search snippets and quality features.
 
 Parsing contract (pinned by the closed-form oracle and unit tests):
 the parsers read a page's decoded text, of which only the first
-``HEAD_BYTES`` characters are scanned (the head region; bounds per-row
-cost at crawl scale; pagination and provenance scan ``PAGINATION_BYTES``
-characters), attributes match in any order with any quoting, the FIRST
+``HEAD_BYTES`` characters are scanned (the head region; pagination and
+provenance scan ``PAGINATION_BYTES`` characters). The caps bound the
+regex scans; the router decodes the whole page, as it does for the
+extractor. Attributes match in any order with any quoting, the FIRST
 occurrence of title/canonical/description wins, canonical hrefs resolve
 RFC-3986-relative against the page url, and a non-HTML or malformed page
 yields one all-NULL row, never a task failure — the same degradation
@@ -328,9 +329,9 @@ def _meta_stage(pages_df: DataFrame, schema: str, parse) -> DataFrame:
     a non-HTML or failing page gets NULL fields and zero counts."""
     columns = [field.split()[0] for field in schema.split(",")][1:]
     null_row = tuple(0 if c.startswith("n_") else None for c in columns)
-    return html_page_stage(
-        pages_df,
-        schema,
-        lambda url, text: [tuple(parse(url, text)[c] for c in columns)],
-        [null_row],
-    )
+
+    def row(url, text):
+        fields = parse(url, text)
+        return [tuple(fields[c] for c in columns)]
+
+    return html_page_stage(pages_df, schema, row, [null_row])

@@ -148,26 +148,33 @@ def _microdata_rows(_url: str, text: str) -> list[tuple]:
     tag name), so the scan is linear in the page."""
     rows: list[tuple] = []
     next_idx = 0
-    # stack entries: (tag, item (idx, type) scoping descendants, collector);
-    # a collector is (item_idx, item_type, prop, text parts)
-    stack: list[tuple] = []
-    open_tags: dict[str, int] = {}
-    collectors: list[tuple] = []
+    # stack entries: {tag, item: (idx, type) scoping descendants, collector}
+    stack: list[dict] = []
+    open_tags: dict[str, int] = {}  # tag -> open elements of that name
+    collectors: list[dict] = []
 
     def pop() -> str:
-        tag, _item, c = stack.pop()
-        open_tags[tag] -= 1
+        ent = stack.pop()
+        open_tags[ent["tag"]] -= 1
+        c = ent.get("collector")
         if c is not None:
             collectors.pop()  # stack order: c is the innermost collector
-            rows.append((*c[:3], " ".join("".join(c[3]).split())))
-        return tag
+            rows.append(
+                (
+                    c["item_idx"],
+                    c["item_type"],
+                    c["prop"],
+                    " ".join("".join(c["parts"]).split()),
+                )
+            )
+        return ent["tag"]
 
     pos = 0
     for m in _MD_TAG_RE.finditer(text):
         seg = text[pos : m.start()]
         if seg:
             for c in collectors:
-                c[3].append(seg)
+                c["parts"].append(seg)
         pos = m.end()
         closing, tag, attrstr = m.groups()
         tag = tag.lower()
@@ -178,7 +185,7 @@ def _microdata_rows(_url: str, text: str) -> list[tuple]:
             continue
         attrs = _md_attrs(attrstr)
         is_void = tag in _MD_VOID or attrstr.rstrip().endswith("/")
-        enclosing = stack[-1][1] if stack else None
+        enclosing = stack[-1]["item"] if stack else None
         item_for_children = enclosing
         collector = None
         if "itemscope" in attrs:
@@ -186,19 +193,26 @@ def _microdata_rows(_url: str, text: str) -> list[tuple]:
             next_idx += 1
             itype = attrs.get("itemtype") or None
             if "itemprop" in attrs and enclosing is not None:
-                rows.append((*enclosing, attrs["itemprop"], f"item:{idx}"))
+                rows.append(
+                    (enclosing[0], enclosing[1], attrs["itemprop"], f"item:{idx}")
+                )
             item_for_children = (idx, itype)
         elif attrs.get("itemprop") and enclosing is not None:
             prop = attrs["itemprop"]
             src = _MD_ATTR_VALUE.get(tag)
             if src is not None and attrs.get(src) is not None:
-                rows.append((*enclosing, prop, attrs[src]))
+                rows.append((enclosing[0], enclosing[1], prop, attrs[src]))
             elif is_void:
-                rows.append((*enclosing, prop, ""))
+                rows.append((enclosing[0], enclosing[1], prop, ""))
             else:
-                collector = (*enclosing, prop, [])
+                collector = {
+                    "item_idx": enclosing[0],
+                    "item_type": enclosing[1],
+                    "prop": prop,
+                    "parts": [],
+                }
         if not is_void:
-            stack.append((tag, item_for_children, collector))
+            stack.append({"tag": tag, "item": item_for_children, "collector": collector})
             open_tags[tag] = open_tags.get(tag, 0) + 1
             if collector is not None:
                 collectors.append(collector)
@@ -207,7 +221,7 @@ def _microdata_rows(_url: str, text: str) -> list[tuple]:
     tail = text[pos:]
     if tail:
         for c in collectors:
-            c[3].append(tail)
+            c["parts"].append(tail)
     while stack:
         pop()
     return rows

@@ -16,9 +16,10 @@ DataFrame (path, n_records, n_bytes) is what the caller commits.
 
 The envelope reuses the SAME kernels as the page_meta / page_links
 queries (operators/page_meta._page_meta, operators/link_graph._page_links)
-on the text of one ``page_route`` call per page, so the sidecar always
-agrees with the queryable tables; JSON is canonicalized (sort_keys,
-tight separators) so records are reproducible byte-for-byte.
+on the text of one ``dom_query.html_text`` call per page (the page
+reader those queries use), so the sidecar always agrees with the
+queryable tables; JSON is canonicalized (sort_keys, tight separators) so
+records are reproducible byte-for-byte.
 
 Round-trip guarantee: ``read_wat`` parses the metadata records back into
 (url, warc_ts, envelope) rows — pinned by tests/test_wat.py.
@@ -40,12 +41,11 @@ WAT_SCHEMA = "path string, n_records long, n_bytes long"
 
 def wat_envelope(url: str, ts_s: str, blob: bytes) -> str:
     """Canonical JSON envelope for one page (sorted keys, no whitespace)."""
-    from ..operators.extract import page_route
+    from ..operators.dom_query import html_text
     from ..operators.link_graph import _page_links
     from ..operators.page_meta import _page_meta
 
-    route, text = page_route(blob)
-    text = text if route == "html" else ""  # no markup: NULL head, no links
+    text = html_text(blob) or ""  # not html: NULL head, no links
     meta = _page_meta(url, text)
     links = [
         {"pos": pos, "text": anchor, "url": dst}

@@ -1,6 +1,8 @@
 """Page-head metadata parser: quoting/order variants, first-wins,
 relative canonical resolution, non-HTML degradation, plan shape."""
 
+import collections
+
 from ocr_spark.operators.page_meta import _page_meta, extract_page_meta
 from tests.conftest import run_stage
 
@@ -281,10 +283,11 @@ def test_meta_sidecar_fused_single_stage(spark):
 
 def test_meta_sidecar_decodes_each_page_once(monkeypatch):
     """The sidecar's four parsers share one routed, decoded text per page:
-    ``decode_bytes`` runs once per page, whichever module calls it."""
+    ``decode_bytes`` runs once per page, whichever module calls it, and
+    each parser runs once per html page (never once per output column)."""
     import ocr_spark.kernels.encoding as encoding
     import ocr_spark.operators.extract as extract
-    from ocr_spark.operators.page_meta import extract_meta_sidecar
+    import ocr_spark.operators.page_meta as page_meta
 
     calls = []
     real = encoding.decode_bytes
@@ -295,12 +298,26 @@ def test_meta_sidecar_decodes_each_page_once(monkeypatch):
 
     monkeypatch.setattr(encoding, "decode_bytes", counting)
     monkeypatch.setattr(extract, "decode_bytes", counting)
+    parsed = []
+    for name in ("_page_meta", "_og_meta", "_pagination", "_provenance"):
+        real_parser = getattr(page_meta, name)
+
+        def counted(*args, _name=name, _real=real_parser):
+            parsed.append(_name)
+            return _real(*args)
+
+        monkeypatch.setattr(page_meta, name, counted)
     pages = [
         ("https://s.example/1", b'<html><head><title>T1</title></head></html>'),
         ("https://s.example/2", "<html><title>Café</title></html>".encode("cp1252")),
         ("https://s.example/3", _UTF16_PAGE),
     ]
-    rows = run_stage(extract_meta_sidecar, pages)
+    pdf = ("https://s.example/pdf", b"%PDF-1.4")
+    rows = run_stage(page_meta.extract_meta_sidecar, pages + [pdf])
     assert len(calls) == len(pages)
-    assert [r["title"] for r in rows] == ["T1", "Café", "Café crème"]
+    assert collections.Counter(parsed) == {
+        name: len(pages)
+        for name in ("_page_meta", "_og_meta", "_pagination", "_provenance")
+    }
+    assert [r["title"] for r in rows] == ["T1", "Café", "Café crème", None]
     assert rows[2]["next_url"] == "https://s.example/p/2"
